@@ -223,7 +223,30 @@ def _clean_token_hist(
         b = (flat_k.astype(np.int64) * buckets) // vocab_size
         np.minimum(b, buckets - 1, out=b)
         np.maximum(b, 0, out=b)
-    key = pid_k.astype(np.int64) * buckets + b
+    return _hist_rows(pid_k.astype(np.int64) * buckets + b, buckets)
+
+
+def _clean_ntok_hist(
+    n_tok: np.ndarray,  # float64, NaN where null
+    part: np.ndarray,
+    clean: np.ndarray,
+    buckets: int,
+    ntok_max: int,
+):
+    """(part_id, bucket, cnt) arrays of the clean-row n_tok histogram, or
+    None when empty. Null n_tok rows are excluded; the clip and bucket
+    rule is ``ntok_bucket_expr``'s."""
+    keep = clean & ~np.isnan(n_tok)
+    if not keep.any():
+        return None
+    n = np.clip(n_tok[keep], 0, ntok_max).astype(np.int64)
+    b = (n * buckets) // (ntok_max + 1)
+    return _hist_rows(part[keep].astype(np.int64) * buckets + b, buckets)
+
+
+def _hist_rows(key: np.ndarray, buckets: int):
+    """Count ``part_id * buckets + bucket`` keys into (part_id int32,
+    bucket int32, cnt int64) arrays of the non-zero cells."""
     cnt = np.bincount(key)
     nz = np.flatnonzero(cnt)
     return (
@@ -265,6 +288,8 @@ def _clean_mask(
 def featurize_hist_kernel(
     buckets: int,
     vocab_size: int,
+    ntok_buckets: int,
+    ntok_max: int,
     allowed_sources: tuple[str, ...],
     checks: tuple[str, ...] = ROW_CHECKS_ALL,
 ):
@@ -273,8 +298,11 @@ def featurize_hist_kernel(
 
     - ``kind=0`` rows: the narrow per-row feature frame
       (doc_id, part_id, n_tok, source, ts, tok_len, tok_oob);
-    - ``kind=1`` rows: the per-partition token-bucket histogram over
-      clean rows (part_id, bucket, cnt).
+    - ``kind=1`` rows: the per-partition clean-row histograms
+      (part_id, family, bucket, cnt) of both drift families —
+      ``family=0`` the token-bucket histogram, ``family=1`` the n_tok
+      histogram (``ntok_bucket_expr``'s clip and bucket rule, null
+      n_tok excluded).
 
     One pass over the token bytes feeds every downstream check — the
     suite's total token decode count drops to ONE. All numpy over
@@ -318,29 +346,37 @@ def featurize_hist_kernel(
                     # the native F.size(NULL) → NULL of featurize()
                     "tok_len": pa.array(lengths.astype(np.int32), mask=~tok_valid, type=pa.int32()),
                     "tok_oob": pa.array(n_bad > 0, type=pa.bool_()),
-                    "bucket": pa.array([None] * n, type=pa.int32()),
-                    "cnt": pa.array([None] * n, type=pa.int64()),
+                    "family": pa.nulls(n, type=pa.int8()),
+                    "bucket": pa.nulls(n, type=pa.int32()),
+                    "cnt": pa.nulls(n, type=pa.int64()),
                 }
             )
             yield row_batch
 
-            hist = _clean_token_hist(
+            tok_hist = _clean_token_hist(
                 flat, lengths, part, clean, buckets, vocab_size,
                 range_checked="token_range" in checks,
             )
-            if hist is not None:
-                pid_out, bucket_out, cnt_out = hist
+            ntok_hist = _clean_ntok_hist(n_tok, part, clean, ntok_buckets, ntok_max)
+            # (family, (part_id, bucket, cnt)) of the non-empty families
+            hists = [(f, h) for f, h in enumerate((tok_hist, ntok_hist)) if h is not None]
+            if hists:
+                fam = np.concatenate([np.full(len(h[0]), f, dtype=np.int8) for f, h in hists])
+                pid_out, bucket_out, cnt_out = (
+                    np.concatenate(c) for c in zip(*(h for _, h in hists))
+                )
                 m = len(pid_out)
                 yield pa.record_batch(
                     {
                         "kind": pa.array(np.ones(m, dtype=np.int8), type=pa.int8()),
-                        "doc_id": pa.array([None] * m, type=pa.string()),
+                        "doc_id": pa.nulls(m, type=pa.string()),
                         "part_id": pa.array(pid_out, type=pa.int32()),
-                        "n_tok": pa.array([None] * m, type=pa.int32()),
-                        "source": pa.array([None] * m, type=pa.string()),
+                        "n_tok": pa.nulls(m, type=pa.int32()),
+                        "source": pa.nulls(m, type=pa.string()),
                         "ts": pa.nulls(m, type=row_batch.column(5).type),
-                        "tok_len": pa.array([None] * m, type=pa.int32()),
-                        "tok_oob": pa.array([None] * m, type=pa.bool_()),
+                        "tok_len": pa.nulls(m, type=pa.int32()),
+                        "tok_oob": pa.nulls(m, type=pa.bool_()),
+                        "family": pa.array(fam, type=pa.int8()),
                         "bucket": pa.array(bucket_out, type=pa.int32()),
                         "cnt": pa.array(cnt_out, type=pa.int64()),
                     }

@@ -5,13 +5,15 @@ fit + tail probability, /root/reference/htm_streamer/data/
 anomalylikelihood.py:424-467,718-788) with distribution distances computed
 per partition against a checkpointed baseline:
 
-- token-frequency histogram: explode each row's token-bucket ids and
-  count — Spark's map-side partial aggregation collapses the exploded
-  stream to ``n_partitions × n_buckets`` rows before the shuffle, so the
-  shuffle moves histograms, not tokens.
-- n_tok histogram: one bucket per row, same shape.
+- token-frequency histogram: each row's token-bucket ids counted per
+  partition — in the flagship by the fused Arrow kernel, which emits
+  per-batch partial counts, so the shuffle moves histograms, not tokens.
+- n_tok histogram: one bucket per row, emitted by the same kernel pass
+  as a second histogram *family* (``FAMILIES``).
 - PSI / KL with probability floors — the flooring mirrors the reference's
-  mean/variance floors (anomalylikelihood.py:733-742).
+  mean/variance floors (anomalylikelihood.py:733-742) — scored for every
+  family in one pass over sparse per-family bucket maps
+  (``drift_scores``).
 
 The probation verdict for partitions seen before the baseline commit
 mirrors the probationary flat-0.5 (anomalylikelihood.py:440-442); the
@@ -21,7 +23,9 @@ override (model/htm_model.py:385-388).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from htm_streamer_spark.config import HIST_EPS, NTOK_MAX, EngineConfig
@@ -31,6 +35,9 @@ from htm_streamer_spark.functions.array_funcs import (
     token_bucket_expr,
     token_hist_kernel,
 )
+
+# drift histogram families; a family's id is its index here
+FAMILIES = ("tok", "ntok")
 
 
 def token_histogram(df: DataFrame, cfg: EngineConfig, impl: str = "arrow") -> DataFrame:
@@ -81,30 +88,31 @@ def featurize_and_token_histogram(
     df: DataFrame, cfg: EngineConfig
 ) -> tuple[DataFrame, DataFrame]:
     """ONE pass over the token bytes producing both the narrow per-row
-    feature frame and the per-partition clean-row token histogram (see
-    functions/array_funcs.py:featurize_hist_kernel). Returns
-    (narrow_df, tok_hist_df). The caller persists the combined output;
-    both returned frames are filters over it, so the token column is
-    decoded exactly once per suite run."""
+    feature frame and the per-partition clean-row histograms of both
+    drift families (see functions/array_funcs.py:featurize_hist_kernel).
+    Returns (narrow_df, hist_df). hist_df rows are the kernel's per-batch
+    partial counts (part_id, family, bucket, cnt), not yet summed per
+    key — ``drift_scores`` sums them in its first aggregation; ``family``
+    indexes ``FAMILIES``. The kernel output is persisted; both returned
+    frames are filters over it, so the token column is decoded exactly
+    once per suite run."""
     from htm_streamer_spark.functions.array_funcs import featurize_hist_kernel
 
     out = df.select("doc_id", "part_id", "n_tok", "source", "ts", "tokens").mapInArrow(
         featurize_hist_kernel(
-            cfg.tok_hist_buckets, cfg.vocab_size, cfg.allowed_sources, cfg.checks
+            cfg.tok_hist_buckets, cfg.vocab_size, cfg.ntok_hist_buckets, NTOK_MAX,
+            cfg.allowed_sources, cfg.checks,
         ),
         schema=(
             "kind tinyint, doc_id string, part_id int, n_tok int, source string, "
-            "ts timestamp, tok_len int, tok_oob boolean, bucket int, cnt long"
+            "ts timestamp, tok_len int, tok_oob boolean, family tinyint, bucket int, "
+            "cnt long"
         ),
     ).persist()
     narrow = out.filter(F.col("kind") == 0).select(
         "doc_id", "part_id", "n_tok", "source", "ts", "tok_len", "tok_oob"
     )
-    hist = (
-        out.filter(F.col("kind") == 1)
-        .groupBy("part_id", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    hist = out.filter(F.col("kind") == 1).select("part_id", "family", "bucket", "cnt")
     return narrow, hist
 
 
@@ -119,36 +127,84 @@ def ntok_histogram(df: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
 
 
-def drift_scores(part_hist: DataFrame, baseline_hist: DataFrame, n_buckets: int) -> DataFrame:
-    """(part_id, psi, kl) of each partition's histogram vs the baseline.
+def family_hist(hists: dict[str, DataFrame]) -> DataFrame:
+    """Tag per-family (…, bucket, cnt) frames keyed by ``FAMILIES`` names
+    (the checkpointed baseline's shape) into one (…, family, bucket, cnt)
+    frame, the shape ``drift_scores`` reads."""
+    tagged = [
+        hists[name].withColumn("family", F.lit(f).cast("tinyint"))
+        for f, name in enumerate(FAMILIES)
+    ]
+    return reduce(DataFrame.unionByName, tagged)
 
-    Exact oracle semantics: p = cnt / max(total, 1), floored at 1e-6 (and
-    likewise q); PSI = Σ (p-q)·ln(p/q); KL = Σ p·ln(p/q), summed over the
-    full bucket grid. Inputs are already tiny (n_partitions × n_buckets),
-    so the grid cross-join and joins below are all broadcast-sized.
+
+def drift_scores(
+    part_hist: DataFrame, baseline_hist: DataFrame, n_buckets: tuple[int, ...]
+) -> DataFrame:
+    """(part_id, psi, kl) of each partition's histograms vs the baseline:
+    the greatest score over the histogram families, a family absent
+    from a partition counting as 0.
+
+    ``part_hist`` rows are (part_id, family, bucket, cnt) and
+    ``baseline_hist`` rows (family, bucket, cnt), both partial counts in
+    any multiplicity (summed per key here); ``n_buckets[family]`` is the
+    family's bucket-grid width.
+
+    Exact oracle semantics: p = cnt / max(total, 1), floored at
+    ``HIST_EPS`` (and likewise q); PSI = Σ (p-q)·ln(p/q); KL = Σ p·ln(p/q),
+    summed over the full bucket grid. Plan: after the per-bucket sum and
+    one repartition by part_id, a groupBy(part_id, family) folds each
+    histogram into a sparse bucket→count map plus its total; the
+    baseline is one such map per family (≤ Σ n_buckets entries),
+    broadcast; both sums run in one projection as an ``aggregate`` over
+    ``sequence(0, n_buckets-1)``; a groupBy(part_id) takes the greatest
+    over families. Two exchanges per side, no grid, no cross join.
     """
-    spark = part_hist.sparkSession
-    buckets = spark.range(n_buckets).select(F.col("id").cast("int").alias("bucket"))
-    pids = part_hist.select("part_id").distinct()
-    grid = pids.crossJoin(F.broadcast(buckets))
 
-    p_tot = part_hist.groupBy("part_id").agg(F.sum("cnt").alias("p_total"))
-    q_tot = baseline_hist.agg(F.sum("cnt").alias("q_total"))
-    base = baseline_hist.withColumnRenamed("cnt", "q_cnt")
+    def sparse(df: DataFrame, keys: list[str], m: str, total: str) -> DataFrame:
+        # the per-bucket sum keeps its map-side partial aggregation; the
+        # repartition by the leading key then serves every later step
+        # (the map fold, and on the partition side the groupBy(part_id)
+        # and the verdict join) without another exchange
+        return (
+            df.groupBy(*keys, "bucket")
+            .agg(F.sum("cnt").alias("cnt"))
+            .repartition(keys[0])
+            .groupBy(*keys)
+            .agg(
+                F.map_from_entries(F.collect_list(F.struct("bucket", "cnt"))).alias(m),
+                F.sum("cnt").alias(total),
+            )
+        )
 
-    joined = (
-        grid.join(part_hist, ["part_id", "bucket"], "left")
-        .join(F.broadcast(base), ["bucket"], "left")
-        .join(p_tot, ["part_id"], "left")
-        .crossJoin(F.broadcast(q_tot))
-        .fillna({"cnt": 0, "q_cnt": 0, "p_total": 0, "q_total": 0})
+    joined = sparse(part_hist, ["part_id", "family"], "p", "p_total").join(
+        F.broadcast(sparse(baseline_hist, ["family"], "q", "q_total")), "family", "left"
     )
-    p = F.greatest(F.col("cnt") / F.greatest(F.col("p_total"), F.lit(1.0)), F.lit(HIST_EPS))
-    q = F.greatest(F.col("q_cnt") / F.greatest(F.col("q_total"), F.lit(1.0)), F.lit(HIST_EPS))
-    lr = F.log(p / q)
-    return joined.groupBy("part_id").agg(
-        F.sum((p - q) * lr).alias("psi"),
-        F.sum(p * lr).alias("kl"),
+    p_total = F.greatest(F.col("p_total"), F.lit(1)).cast("double")
+    q_total = F.greatest(F.coalesce(F.col("q_total"), F.lit(0)), F.lit(1)).cast("double")
+    width = F.array(*[F.lit(n) for n in n_buckets])[F.col("family")]
+
+    def step(acc: Column, b: Column) -> Column:
+        p = F.greatest(F.coalesce(F.col("p")[b], F.lit(0)) / p_total, F.lit(HIST_EPS))
+        q = F.greatest(F.coalesce(F.col("q")[b], F.lit(0)) / q_total, F.lit(HIST_EPS))
+        lr = F.log(p / q)
+        return F.struct(
+            (acc["psi"] + (p - q) * lr).alias("psi"), (acc["kl"] + p * lr).alias("kl")
+        )
+
+    scores = joined.select(
+        "part_id",
+        F.aggregate(
+            F.sequence(F.lit(0), width - 1),
+            F.struct(F.lit(0.0).alias("psi"), F.lit(0.0).alias("kl")),
+            step,
+        ).alias("s"),
+    )
+    # greatest() skips nulls: the 0 joins in only when a family is absent
+    absent = F.when(F.count(F.lit(1)) < len(n_buckets), F.lit(0.0))
+    return scores.groupBy("part_id").agg(
+        F.greatest(F.max("s.psi"), absent).alias("psi"),
+        F.greatest(F.max("s.kl"), absent).alias("kl"),
     )
 
 

@@ -116,9 +116,13 @@ def jaccard_similarity_join(
     # no corpus-wide string arrays (the interpreted array_distinct/
     # array_sort set build alone measured 6.4s at sf1-scale), narrower
     # shuffles (guide §2.3), long-compare joins. Correctness: hashing
-    # can only MERGE distinct tokens, so hash-universe jaccard >=
-    # string jaccard — every string-qualifying pair qualifies here too
-    # (superset generator), and the string confirm at the end is exact.
+    # can only MERGE distinct tokens, and a merge lowers a pair's
+    # jaccard only when both merged tokens are shared by the pair (the
+    # intersection and the union each lose one). So hash-universe
+    # jaccard >= string jaccard except on a 64-bit collision between
+    # two shared tokens (~n^2/2^64 odds, accepted): every
+    # string-qualifying pair qualifies here too (superset generator),
+    # and the string confirm at the end is exact.
     base = fan_out_narrow_scans(docs.select(id_col, text_col)).select(
         F.col(id_col).alias("_id"),
         F.split(normalized_text(F.col(text_col)), r"\s+").alias("_ws0"),

@@ -12,6 +12,16 @@ config.py:199-225 and pipeline/htm_stream.py:76-147):
    referential), drift scores vs baseline, verdict assembly with the
    hard-fail override (model/htm_model.py:385-392) and probation
    (anomalylikelihood.py:440-442).
+
+Job shape of the verdicts action: one fused Arrow pass over the token
+bytes emits the narrow per-row frame and the clean-row histograms of
+both drift families (token buckets and n_tok) as tagged rows. Drift is
+then scored for every family at once — two exchanges on the partition
+side, two plus one broadcast on the baseline side — and the stats,
+violation-count and drift frames, all hash-partitioned by part_id, meet
+in merge joins without another exchange. Whether the baseline
+is fitted from the batch itself or passed in (the incremental and
+streaming drivers), it takes the same ``drift_scores`` path.
 """
 
 from __future__ import annotations
@@ -24,9 +34,9 @@ from pyspark.sql import functions as F
 from htm_streamer_spark.config import EngineConfig, validate_input_schema
 from htm_streamer_spark.operators.drift import (
     drift_scores,
+    family_hist,
     featurize_and_token_histogram,
     ntok_histogram,
-    token_histogram,
     token_histogram_checked,
 )
 from htm_streamer_spark.operators.invariants import (
@@ -112,8 +122,6 @@ def run_validation_batch(
     df: DataFrame,
     cfg: EngineConfig | None = None,
     baseline: dict[str, DataFrame] | None = None,
-    persist: bool = True,
-    fused: bool = True,
 ) -> ValidationResult:
     """Full-suite batch validation of ``df`` (the input_hint schema).
 
@@ -123,26 +131,13 @@ def run_validation_batch(
     violations — the hard-fail override).
     """
     cfg = cfg or EngineConfig()
-    # ONE pass over the token bytes: a fused Arrow kernel emits both the
+    # ONE pass over the token bytes: a fused Arrow kernel emits the
     # narrow per-row feature frame (size + range check) and the
-    # clean-row token histogram; everything downstream runs on the
-    # ~1%-size result. Caching the wide frame (tokens are ~99% of the
-    # bytes) was the measured bottleneck — at 10^12 rows it is
-    # impossible.
-    drift_enabled = "drift" in cfg.checks
-    tok_all = None
-    if drift_enabled and fused:
-        # one token decode total; narrow rows ride the Arrow IPC
-        narrow, tok_all = featurize_and_token_histogram(df, cfg)
-    else:
-        # two token decodes (JVM featurize + Arrow histogram kernel);
-        # no per-row IPC — wins when rows are many and tokens short
-        narrow = featurize(df, cfg)
-        if persist:
-            narrow = narrow.persist()
-        if drift_enabled:
-            tok_all = token_histogram_checked(df, cfg).persist()
-    base_parts: list[int]
+    # clean-row histograms of both drift families; everything
+    # downstream runs on the ~1%-size result. Caching the wide frame
+    # (tokens are ~99% of the bytes) was the measured bottleneck — at
+    # 10^12 rows it is impossible.
+    narrow, hist = featurize_and_token_histogram(df, cfg)
     fit_from_self = baseline is None
     if fit_from_self:
         base_parts = baseline_part_ids(narrow, cfg)
@@ -155,55 +150,31 @@ def run_validation_batch(
     n_viol = viols.groupBy("part_id").agg(F.count(F.lit(1)).alias("n_violations"))
     stats = partition_stats(narrow, cfg, featurized=True)
 
+    # stats, n_viol and drift all arrive hash-partitioned by part_id, so
+    # a merge join reads n_viol in place; AQE's runtime switch to a
+    # broadcast would cost one more job for a few rows
+    verdicts = stats.select("part_id").join(n_viol.hint("merge"), "part_id", "left")
+    drift_enabled = "drift" in cfg.checks
     if drift_enabled:
-        clean = row_check_flags(narrow, cfg, featurized=True).filter(
-            ~F.col("any_violation")
+        # the self-fitted baseline is the baseline partitions' rows of
+        # the same per-partition histograms; drift_scores sums them
+        base_hist = (
+            hist.filter(F.col("part_id").isin(base_parts)).drop("part_id")
+            if fit_from_self
+            else family_hist(baseline)
         )
-        ntok_all = ntok_histogram(clean, cfg)
-        if fit_from_self:
-            # the baseline is a tiny post-aggregation of the same
-            # per-partition histograms the fused kernel already produced
-            baseline = {
-                "tok": tok_all.filter(F.col("part_id").isin(base_parts))
-                .groupBy("bucket")
-                .agg(F.sum("cnt").alias("cnt")),
-                "ntok": ntok_all.filter(F.col("part_id").isin(base_parts))
-                .groupBy("bucket")
-                .agg(F.sum("cnt").alias("cnt")),
-                "part_ids": base_parts,
-            }
-        tok_nonbase = (
-            tok_all.filter(~F.col("part_id").isin(base_parts)) if base_parts else tok_all
+        drift = drift_scores(
+            hist, base_hist, (cfg.tok_hist_buckets, cfg.ntok_hist_buckets)
         )
-        ntok_nonbase = (
-            ntok_all.filter(~F.col("part_id").isin(base_parts)) if base_parts else ntok_all
-        )
-        tok_scores = drift_scores(
-            tok_nonbase, baseline["tok"], cfg.tok_hist_buckets
-        ).withColumnsRenamed({"psi": "psi_tok", "kl": "kl_tok"})
-        ntok_scores = drift_scores(
-            ntok_nonbase, baseline["ntok"], cfg.ntok_hist_buckets
-        ).withColumnsRenamed({"psi": "psi_ntok", "kl": "kl_ntok"})
-        drift = tok_scores.join(ntok_scores, "part_id", "outer").select(
-            "part_id",
-            F.greatest(F.coalesce("psi_tok", F.lit(0.0)), F.coalesce("psi_ntok", F.lit(0.0))).alias("psi"),
-            F.greatest(F.coalesce("kl_tok", F.lit(0.0)), F.coalesce("kl_ntok", F.lit(0.0))).alias("kl"),
-        )
-    else:
-        drift = None
-
-    verdicts = stats.select("part_id").join(n_viol, "part_id", "left")
-    if drift is not None:
         verdicts = verdicts.join(drift, "part_id", "left")
     else:
-        verdicts = verdicts.withColumn("psi", F.lit(None).cast("double")).withColumn(
-            "kl", F.lit(None).cast("double")
+        verdicts = verdicts.withColumns(
+            {"psi": F.lit(None).cast("double"), "kl": F.lit(None).cast("double")}
         )
     is_base = F.col("part_id").isin(base_parts) if base_parts else F.lit(False)
     nv = F.coalesce(F.col("n_violations"), F.lit(0)).alias("n_violations")
     psi = F.when(is_base, F.lit(0.0)).otherwise(F.coalesce(F.col("psi"), F.lit(0.0)))
     kl = F.when(is_base, F.lit(0.0)).otherwise(F.coalesce(F.col("kl"), F.lit(0.0)))
-    drift_enabled = "drift" in cfg.checks
     verdict = (
         F.when(nv > 0, F.lit("fail"))
         .when(is_base, F.lit("probation"))

@@ -4,7 +4,9 @@ Regression tests for two divergences: (1) the fused clean mask used to
 hard-code all five row checks while the native path honored cfg.checks,
 so disabling a check changed the clean-row histograms only on one path;
 (2) null token arrays flattened to length 0 in Arrow (firing
-len_mismatch/empty) while native F.size(NULL) is NULL.
+len_mismatch/empty) while native F.size(NULL) is NULL. Both histogram
+families the fused kernel emits (tokens and n_tok) are checked against
+their native paths.
 """
 
 from __future__ import annotations
@@ -16,7 +18,9 @@ from pyspark.sql import types as T
 
 from htm_streamer_spark.config import SEQUENCES_SCHEMA, EngineConfig
 from htm_streamer_spark.operators.drift import (
+    FAMILIES,
     featurize_and_token_histogram,
+    ntok_histogram,
     token_histogram_checked,
 )
 from htm_streamer_spark.operators.invariants import featurize, row_check_flags
@@ -35,6 +39,9 @@ def messy(spark):
         ("d5", [8, 9], None, "web", None, 1),          # null_n_tok
         ("d6", None, 2, "web", None, 1),               # null tokens
         ("d7", [10, 11, 12, 13], 4, "books", None, 1), # clean
+        ("d8", list(range(600)), 600, "web", None, 1), # clean, n_tok > NTOK_MAX
+        ("d9", [1, 2], 700, "web", None, 0),           # len_mismatch, n_tok > NTOK_MAX
+        ("d10", [3], -2, "books", None, 0),            # len_mismatch, n_tok < 0
     ]
     return spark.createDataFrame(rows, schema=SEQUENCES_SCHEMA)
 
@@ -78,13 +85,30 @@ def test_checked_hist_matches_native_per_checkset(spark, messy, checks):
     assert _collect(fused) == _collect(native)
 
 
+def _release(spark):
+    """The returned frames are filters over the kernel output that
+    featurize_and_token_histogram persisted, so unpersisting them does
+    nothing: drop the persisted frame from the cache manager itself."""
+    spark.catalog.clearCache()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 @pytest.mark.parametrize("checks", CHECK_SETS, ids=["all", "len", "range+src", "empty", "null+src"])
 def test_fused_featurize_hist_matches_native_per_checkset(spark, messy, checks):
     cfg = EngineConfig(checks=checks)
-    narrow, hist = featurize_and_token_histogram(messy, cfg)
-    native = _native_clean_hist(messy, cfg)
-    assert _collect(hist) == _collect(native)
-    narrow.unpersist()
+    _, hist = featurize_and_token_histogram(messy, cfg)
+    clean = row_check_flags(featurize(messy, cfg), cfg, featurized=True).filter(
+        ~F.col("any_violation")
+    )
+    native = {"tok": _native_clean_hist(messy, cfg), "ntok": ntok_histogram(clean, cfg)}
+    for family, name in enumerate(FAMILIES):
+        got = (
+            hist.filter(F.col("family") == family)
+            .groupBy("part_id", "bucket")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+        assert _collect(got) == _collect(native[name]), name
+    _release(spark)
 
 
 def test_fused_narrow_frame_matches_native_featurize(spark, messy):
@@ -95,4 +119,4 @@ def test_fused_narrow_frame_matches_native_featurize(spark, messy):
     native = {r["doc_id"]: (r["tok_len"], r["tok_oob"]) for r in featurize(messy, cfg).collect()}
     assert fused == native
     assert fused["d6"] == (None, False)
-    narrow.unpersist()
+    _release(spark)

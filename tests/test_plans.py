@@ -11,7 +11,7 @@ from htm_streamer_spark.config import EngineConfig
 from htm_streamer_spark.operators.referential import dim_sources_df, referential_violations
 from htm_streamer_spark.operators.stats import partition_stats
 from htm_streamer_spark.operators.uniqueness import duplicate_violations
-from htm_streamer_spark.plans.validation_plan import load_sequences
+from htm_streamer_spark.plans.validation_plan import load_sequences, run_validation_batch
 
 
 def _plan(df) -> str:
@@ -146,3 +146,25 @@ def test_runtime_bloom_filter_injection_on_fact_side(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+# Spark jobs of the flagship's verdicts action once the plan is built:
+# the fused kernel pass, the salted duplicate shuffle, the per-partition
+# stats and the drift exchanges, each stage one job under AQE. Scoring
+# drift per histogram family in one pass, and merge-joining the
+# per-partition frames, cut this from 38 to 12.
+VERDICT_JOB_BUDGET = 12
+
+
+def test_verdicts_job_budget(spark, seq, cfg):
+    sc = spark.sparkContext
+    res = run_validation_batch(spark, seq, cfg)
+    group = "test_verdicts_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        res.verdicts.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.catalog.clearCache()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= VERDICT_JOB_BUDGET, n_jobs

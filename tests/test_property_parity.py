@@ -69,7 +69,7 @@ def test_engine_matches_oracle_on_arbitrary_tables(spark, rows):
         ],
         "doc_id string, tokens array<int>, n_tok int, source string, ts timestamp, part_id int",
     )
-    res = run_validation_batch(spark, sdf, CFG, persist=False)
+    res = run_validation_batch(spark, sdf, CFG)
 
     got_v = (
         res.violations.toPandas()[["doc_id", "part_id", "check_id"]]
