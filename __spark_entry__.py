@@ -1387,12 +1387,12 @@ GROUP BY 1 ORDER BY 1
 
 
 def q_contaminated_ngram_docs(spark, sf_dir):
-    """Word-n-gram decontamination with NO probe broadcast / driver
-    collect (operators/contamination.py contaminated_pairs_ngram):
-    doc grams ship as (doc_id, xxhash64) into a plain equi-join, the
-    tiny candidate set joins back for an exact array_contains confirm.
-    Probe cardinality unbounded — the path that survives when the eval
-    suite is too big to broadcast."""
+    """Word-n-gram decontamination with NO broadcast / driver collect
+    (operators/contamination.py contaminated_pairs_ngram): doc gram
+    strings equi-join the probe grams in one shuffle-hash join, probes
+    as the build side — string equality is the exact check, so one
+    corpus scan and no cache. Probe cardinality unbounded — the path
+    that survives when the eval suite is too big to broadcast."""
     from htm_streamer_spark.operators.contamination import (
         contaminated_pairs_ngram,
         derive_ngram_probes,

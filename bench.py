@@ -318,7 +318,7 @@ def run_bench(spark, sf_dir: str, sf: str) -> dict:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = Path(sf_dir).name.replace("sf", "") or "0.1"
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
     from htm_streamer_spark.session import get_spark
 

@@ -4,8 +4,8 @@ shuffle.
 
 Why this exists when ``contaminated_pairs_ngram`` already avoids the
 driver collect: the plain equi-join strategy still SHUFFLES every
-distinct gram hash of the corpus (16 bytes x ~10^2 grams/doc x 10^12
-docs) into the join, and virtually all of that traffic is misses —
+gram string of the corpus (~10^2 grams/doc x 10^12 docs) into the
+join, and virtually all of that traffic is misses —
 probes are eval-set-sized, matches are rare by construction. A Bloom
 filter inverts the economics: the probe set compresses to ``m_bits``
 bits (2^20 bits = 128 KiB covers ~10^5 grams at k=5 with fpp ~1e-4),
@@ -49,6 +49,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from htm_streamer_spark.operators.contamination import _doc_grams
 
 __all__ = [
     "bloom_build",
@@ -150,36 +152,14 @@ def contaminated_pairs_bloom(
     large: probe cardinality is unbounded (the filter build is
     distributed and the collected state is fixed-size), and the doc
     side's shuffle carries only gate survivors (matches + fpp trickle)
-    instead of every distinct gram in the corpus.
+    instead of every gram in the corpus.
 
-    Equality caveat: this form ends with ``.distinct()`` on
-    (doc_id, probe_id), while the ngram form deduplicates on
-    (doc_id, probe_id, gram) and can emit one row per shared gram. The
-    outputs are row-identical only when each probe_id carries a single
-    gram — true of ``derive_ngram_probes`` (one n-gram per probe row),
-    which is the contract this operator assumes. A multi-gram probe
-    set still gets the correct PAIR set here, just pre-deduplicated.
-
-    Because survivors are rare, they can keep their gram TEXT through
-    the join — the join on the string itself is the exact confirm, so
-    the plan needs ONE scan of the corpus (the plain-join strategy
-    needs two: hash join + confirm re-scan)."""
-    from htm_streamer_spark.operators.contamination import _word_array
-    from htm_streamer_spark.operators.dedup import _gram_array, fan_out_narrow_scans
-
+    Same gram stream (``contamination._doc_grams``) and same exact
+    string join as the plain strategy, with the gate between them;
+    both dedup on (doc_id, probe_id), so the outputs are row-identical
+    for any probe set."""
     bits = bloom_bits(bloom_build(probes, "gram", m_bits, k), m_bits)
-    doc_grams = (
-        fan_out_narrow_scans(docs.select("doc_id", text_col))
-        .select("doc_id", _word_array(text_col).alias("_ws"))
-        .select(
-            "doc_id",
-            F.explode_outer(F.array_distinct(_gram_array(F.col("_ws"), n))).alias(
-                "gram"
-            ),
-        )
-        .filter(F.col("gram").isNotNull())
-    )
-    survivors = bloom_gate(doc_grams, "gram", bits, m_bits, k)
+    survivors = bloom_gate(_doc_grams(docs, text_col, n), "gram", bits, m_bits, k)
     return (
         survivors.join(probes.select("probe_id", "gram"), "gram")
         .filter(F.col("doc_id") != F.col("probe_id"))

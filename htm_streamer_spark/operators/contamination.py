@@ -25,16 +25,15 @@ A third strategy removes the one scale ceiling the first two share —
 both materialize the probe set on the driver (collect for the regex,
 broadcast for the nested-loop). ``contaminated_pairs_ngram`` is the
 word-n-gram membership check (the GPT-3/PaLM decontamination unit is
-an n-gram, 8-13 words) with NO driver collect and NO probe broadcast:
-
-1. doc side explodes word n-grams but ships only ``(doc_id,
-   xxhash64(gram))`` — 16 bytes/row — into a plain shuffle hash join
-   against ``(probe_id, xxhash64(gram))``. Probe cardinality is
-   unbounded; the join is an ordinary distributed equi-join.
-2. the (tiny) candidate pairs join back to the corpus on doc_id and
-   are CONFIRMED exactly via ``array_contains`` on the recomputed gram
-   array — hash collisions only ever cost a re-check, never a wrong
-   answer.
+an n-gram, 8-13 words) with NO driver collect and NO broadcast of
+either side: the doc side explodes every word n-gram position as a
+string (``_doc_grams``) and equi-joins it on the gram string against
+``(probe_id, gram)``, the probe side as the shuffle-hash build side.
+String equality IS the exact check, so the plan scans the corpus once
+and needs no hash pre-filter, no confirm pass and no cache. Probe
+cardinality is unbounded; the join is an ordinary distributed
+equi-join. (``operators/bloom.py`` is the low-traffic form: it drops
+non-member grams before the exchange.)
 
 Reference analog: the referential/membership checks of the validation
 layer (/root/reference/htm_streamer/validation.py) applied to raw text.
@@ -47,7 +46,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from htm_streamer_spark.operators.dedup import _gram_array, normalized_text
+from htm_streamer_spark.operators.dedup import fan_out_narrow_scans, normalized_text
 
 
 def derive_probes(
@@ -154,91 +153,50 @@ def derive_ngram_probes(
     )
 
 
+def _doc_grams(docs: DataFrame, text_col: str, n: int) -> DataFrame:
+    """(doc_id, gram): one row per word-n-gram POSITION of every doc
+    (within-doc repeats included; callers dedup their output pairs).
+
+    Plan hygiene:
+    - fan out ``(doc_id, text)`` first, so a single-file layout does not
+      tokenize on one core;
+    - the word array is built once, in its own projection;
+    - the size guard sits INSIDE the explode: a ``where(size >= n)``
+      would be pushed below the fan-out and re-run the
+      regexp/split/filter chain on the scan side, and without any guard
+      ``sequence(1, size-n+1)`` counts down for docs shorter than n;
+    - grams come from ``array_join(slice(...))`` per position, which
+      stays in whole-stage codegen, unlike the interpreted ``zip_with``
+      chain of ``_gram_array`` plus a per-row ``array_distinct``."""
+    words = fan_out_narrow_scans(docs.select("doc_id", text_col)).select(
+        "doc_id", _word_array(text_col).alias("_t")
+    )
+    pos = F.when(F.size("_t") >= n, F.sequence(F.lit(1), F.size("_t") - (n - 1)))
+    return words.select("doc_id", "_t", F.explode(pos).alias("_p")).select(
+        "doc_id", F.array_join(F.slice("_t", F.col("_p"), n), " ").alias("gram")
+    )
+
+
 def contaminated_pairs_ngram(
     docs: DataFrame, probes: DataFrame, text_col: str = "text", n: int = 5
 ) -> DataFrame:
     """(doc_id, probe_id): documents whose word-n-gram set contains a
     probe n-gram, excluding the probe's own document — exact, with no
-    driver collect and no probe broadcast (see module docstring).
+    driver collect and no broadcast (see module docstring).
 
-    Scale shape: the doc-side shuffle carries (doc_id, int64 hash) per
-    DISTINCT gram per doc; the probe side shuffles its own rows; AQE is
-    free to pick broadcast when one side happens to be small, but
-    nothing requires it. The confirm join touches only candidate
-    doc_ids and re-derives the gram array for exactly those rows."""
-    from htm_streamer_spark.operators.dedup import fan_out_narrow_scans
-
-    # position-slice gram stream (whole-stage codegen) instead of the
-    # interpreted _gram_array+array_distinct chain (higher-order
-    # functions never codegen; the per-row distinct alone was seconds
-    # at sf1-scale). Within-doc duplicate grams ride through the join —
-    # only probe-matching grams fan out, and ``cand`` is distinct-ed
-    # anyway, so the per-doc dedup bought nothing but interpreted CPU.
-    # Fan-out so a single-file layout doesn't hash on one core.
-    doc_side = (
-        fan_out_narrow_scans(docs.select("doc_id", text_col))
-        .select("doc_id", _word_array(text_col).alias("_t"))
-        .where(F.size("_t") >= n)
-        .select(
-            "doc_id",
-            "_t",
-            F.explode(F.sequence(F.lit(1), F.size("_t") - (n - 1))).alias("_p"),
-        )
-        .select(
-            "doc_id",
-            F.xxhash64(
-                F.array_join(F.slice(F.col("_t"), F.col("_p"), n), " ")
-            ).alias("_h"),
-        )
-    )
-    probe_side = probes.select(
-        "probe_id", "gram", F.xxhash64("gram").alias("_h")
-    )
-    cand = (
-        doc_side.join(probe_side, "_h")
+    Scale shape: one scan of the corpus and one exchange per side. The
+    doc side shuffles (doc_id, gram string) per gram position; the
+    probe side, hinted ``shuffle_hash``, is the hash-join build side.
+    Without the hint the planner sizes the exploded gram stream like
+    its parquet file and may broadcast it. The final ``distinct``
+    folds repeated grams and multi-gram probes into one pair."""
+    return (
+        _doc_grams(docs, text_col, n)
+        .join(probes.select("probe_id", "gram").hint("shuffle_hash"), "gram")
         .filter(F.col("doc_id") != F.col("probe_id"))
-        .select("doc_id", "probe_id", "gram")
+        .select("doc_id", "probe_id")
         .distinct()
     )
-    # exact confirm: re-derive gram STRINGS for candidate docs only and
-    # equi-join on (doc_id, gram). The position-slice gram stream stays
-    # inside whole-stage codegen; the previous
-    # ``array_contains(_gram_array(...), gram)`` filter evaluated the
-    # interpreted higher-order zip_with chain once PER CANDIDATE ROW
-    # (measured 95s of a 100s query at sf1.0 on 373k candidates — the
-    # confirm was 20x the rest of the plan). Same rows out: the stream
-    # is deduped per (doc, gram) and cand is already distinct per
-    # (doc, probe, gram), so the membership join neither drops nor
-    # multiplies pairs (equivalence pinned in tests/test_contamination).
-    # the candidate frame is OUTPUT-sized (a pair per contaminated
-    # doc×probe) — broadcast it into the re-derived gram stream so the
-    # corpus-side confirm never shuffles gram text at all (the previous
-    # shape shuffled the full candidate-doc gram stream twice: a
-    # dropDuplicates exchange + the confirm join's SMJ — measured as
-    # the dominant stage once candidates ≈ answers on a low-entropy
-    # corpus). Position duplicates multiply matched pairs and are
-    # deduped on the output-sized frame instead.
-    cand = cand.localCheckpoint(eager=True)
-    cand_ids = cand.select("doc_id").distinct()
-    cgrams = (
-        fan_out_narrow_scans(docs.select("doc_id", text_col))
-        .join(F.broadcast(cand_ids), "doc_id", "left_semi")
-        .select("doc_id", _word_array(text_col).alias("_t"))
-        .where(F.size("_t") >= n)
-        .select(
-            "doc_id",
-            "_t",
-            F.explode(
-                F.sequence(F.lit(1), F.size("_t") - (n - 1))
-            ).alias("_p"),
-        )
-        .select(
-            "doc_id",
-            F.array_join(F.slice(F.col("_t"), F.col("_p"), n), " ").alias("gram"),
-        )
-    )
-    confirmed = cgrams.join(F.broadcast(cand), ["doc_id", "gram"])
-    return confirmed.select("doc_id", "probe_id").distinct()
 
 
 def cross_source_overlap(

@@ -16,11 +16,27 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 
+def host_driver_memory() -> str:
+    """40% of the host's memory or of its cgroup limit, whichever is
+    less, as a JVM size string (at least ``1g``). In local mode the
+    driver heap holds every executor task, so a fixed large default
+    overcommits small hosts."""
+    with open("/proc/meminfo") as f:
+        mem = int(next(line for line in f if line.startswith("MemTotal:")).split()[1]) * 1024
+    try:
+        limit = Path("/sys/fs/cgroup/memory.max").read_text().strip()
+        if limit.isdigit():
+            mem = min(mem, int(limit))
+    except OSError:
+        pass
+    return f"{max(1, int(mem * 0.4 / 2**30))}g"
+
+
 def get_spark(
     app_name: str = "htm_streamer_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -32,11 +48,15 @@ def get_spark(
       on a real cluster this is instead set ~2-3x total executor cores by
       the submit script; AQE coalesces the excess.
     - UTC session timezone so results compare exactly against DuckDB.
+    - driver heap, when not given, sized to the host by
+      :func:`host_driver_memory`.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
+    if driver_memory is None:
+        driver_memory = host_driver_memory()
     # ship the package to python workers even when the driver added it to
     # sys.path at runtime (on a cluster, spark-submit --py-files does this)
     pkg_root = str(Path(__file__).resolve().parents[1])

@@ -16,6 +16,7 @@ from htm_streamer_spark.operators.bloom import (
     contaminated_pairs_bloom,
 )
 from htm_streamer_spark.operators.contamination import (
+    _doc_grams,
     contaminated_pairs_ngram,
     derive_ngram_probes,
 )
@@ -66,20 +67,7 @@ def test_gate_prunes_before_shuffle(spark):
     below any exchange in the plan."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     probes = derive_ngram_probes(docs, every=13, start=4, n=3)
-    from htm_streamer_spark.operators.contamination import _word_array
-    from htm_streamer_spark.operators.dedup import _gram_array, fan_out_narrow_scans
-
-    grams = (
-        fan_out_narrow_scans(docs.select("doc_id", "text"))
-        .select("doc_id", _word_array("text").alias("_ws"))
-        .select(
-            "doc_id",
-            F.explode_outer(F.array_distinct(_gram_array(F.col("_ws"), 3))).alias(
-                "gram"
-            ),
-        )
-        .filter(F.col("gram").isNotNull())
-    )
+    grams = _doc_grams(docs, "text", 3)
     bits = bloom_bits(bloom_build(probes, "gram", 1 << 20, 5), 1 << 20)
     survivors = bloom_gate(grams, "gram", bits, 1 << 20, 5)
     total, kept = grams.count(), survivors.count()

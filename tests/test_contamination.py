@@ -61,6 +61,7 @@ def test_regex_variant_escapes_metacharacters(spark):
 
 
 def test_ngram_variant_known_answer_word_boundaries(spark):
+    gram = "alpha beta gamma delta epsilon"
     docs = _docs(
         spark,
         [
@@ -68,19 +69,40 @@ def test_ngram_variant_known_answer_word_boundaries(spark):
             (1, "xx alpha beta gamma delta epsilon yy"),   # contains the 5-gram
             (2, "xalpha beta gamma delta epsilon"),        # substring, NOT word gram
             (3, "alpha beta gamma delta"),                 # too short
+            (4, "alpha"),                                  # 1 word
+            (5, "alpha beta"),                             # 2 words
+            (6, ""),                                       # empty
+            (7, "!!! ... ???"),                            # punctuation only
+            (8, f"{gram} and {gram}"),                     # repeated: one pair
+            (11, "only here lives this gram"),             # probe 11's own doc
         ],
     )
     probes = spark.createDataFrame(
-        [(9, "alpha beta gamma delta epsilon")], "probe_id long, gram string"
+        [(9, gram), (10, gram), (11, "only here lives this gram")],  # 9, 10 share
+        "probe_id long, gram string",
     )
     got = sorted(map(tuple, contaminated_pairs_ngram(docs, probes, n=5).collect()))
-    assert got == [(0, 9), (1, 9)]
+    assert got == [(0, 9), (0, 10), (1, 9), (1, 10), (8, 9), (8, 10)]
+
+
+def test_ngram_variant_no_broadcast_no_leaked_cache(spark):
+    # at default thresholds neither side is broadcast (the exploded gram
+    # stream is corpus-sized), and no persisted RDD outlives the query
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    probes = derive_ngram_probes(docs, every=31, start=4, n=5)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    out = contaminated_pairs_ngram(docs, probes, n=5)
+    assert len(out.collect()) > 0
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan
+    assert set(jsc.getPersistentRDDs().keySet()) == before
 
 
 def test_ngram_variant_matches_padded_contains_on_corpus(spark):
     # on single-spaced normalized text, word-n-gram membership equals
-    # ' '||text||' ' CONTAINS ' '||gram||' ' — cross-check the hash-join
-    # path against that independent broadcast formulation on real data
+    # ' '||text||' ' CONTAINS ' '||gram||' ' — cross-check the gram-string
+    # equi-join against that independent broadcast formulation on real data
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     probes = derive_ngram_probes(docs, every=31, start=4, n=5)
     a = sorted(map(tuple, contaminated_pairs_ngram(docs, probes, n=5).collect()))
