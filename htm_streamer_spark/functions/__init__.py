@@ -1,13 +1,9 @@
 from htm_streamer_spark.functions.array_funcs import (
-    n_bad_tokens_udf,
+    featurize_hist_kernel,
     token_bucket_expr,
-    token_hist_kernel,
-    token_len_mismatch_udf,
 )
 
 __all__ = [
     "token_bucket_expr",
-    "n_bad_tokens_udf",
-    "token_len_mismatch_udf",
-    "token_hist_kernel",
+    "featurize_hist_kernel",
 ]

@@ -1,14 +1,16 @@
 """Token-array helpers.
 
-Two tiers, per SURVEY.md §2.10:
+Two forms of one set of rules, per SURVEY.md §2.10:
 
-1. **Native expressions** (preferred — JVM-side, whole-stage codegen):
-   ``F.size`` / ``F.exists`` / ``F.forall`` / ``F.transform`` cover the
-   invariants. These fuse into a single pass over the parquet scan.
-2. **Vectorized Arrow pandas UDFs** (the north star's "vectorized Arrow
-   UDFs" form of the same checks) — operate on Arrow column batches with
-   numpy, never per-row Python. Kept as parity alternates and for the
-   histogram-of-arrays case where the expression API can't reach.
+1. **Native expressions** (JVM-side, whole-stage codegen):
+   ``token_oob_expr``, ``token_bucket_expr`` and ``ntok_bucket_expr``
+   state the range check and both histogram bucket rules. They are the
+   reference the kernel is tested against.
+2. **One vectorized Arrow kernel**, ``featurize_hist_kernel``: a
+   ``mapInArrow`` pass that applies the same row checks and bucket
+   rules with numpy over the zero-copy Arrow buffers, never per-row
+   Python. It is the only code that decodes token bytes, both for the
+   flagship run and for the baseline fit.
 
 Reference analogs: encoding width by construction
 (/root/reference/htm_streamer/model/htm_model.py:34) for the length
@@ -19,13 +21,11 @@ range.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
-# native expressions (default hot path)
+# native expressions (the reference rules)
 # ---------------------------------------------------------------------------
 
 
@@ -33,11 +33,6 @@ def token_oob_expr(tokens: Column, vocab_size: int) -> Column:
     """True if any token id is outside [0, vocab_size). Native ``F.exists``
     — short-circuits inside codegen, no Python."""
     return F.exists(tokens, lambda t: (t < F.lit(0)) | (t >= F.lit(vocab_size)))
-
-
-def len_mismatch_expr(tokens: Column, n_tok: Column) -> Column:
-    """True if n_tok is non-null and != len(tokens)."""
-    return n_tok.isNotNull() & (F.size(tokens) != n_tok)
 
 
 def token_bucket_expr(token: Column, buckets: int, vocab_size: int) -> Column:
@@ -52,104 +47,6 @@ def ntok_bucket_expr(n_tok: Column, buckets: int, ntok_max: int) -> Column:
     oracle's ``(clip(n) * buckets) // (ntok_max + 1)``."""
     n = F.greatest(F.lit(0), F.least(F.lit(ntok_max), n_tok.cast("long")))
     return F.floor((n * F.lit(buckets)) / F.lit(ntok_max + 1)).cast("int")
-
-
-# ---------------------------------------------------------------------------
-# vectorized Arrow pandas UDF alternates (no per-row Python: numpy on the
-# flattened Arrow buffers)
-# ---------------------------------------------------------------------------
-
-
-def n_bad_tokens_udf(vocab_size: int):
-    """pandas_udf: count of out-of-range token ids per row.
-
-    Vectorized over the Arrow list column: explode once with numpy via the
-    flattened values + per-row lengths, never a Python loop over rows.
-    """
-
-    @F.pandas_udf(T.IntegerType())
-    def n_bad_tokens(tokens: pd.Series) -> pd.Series:
-        lengths = tokens.map(len).to_numpy(dtype=np.int64)
-        if lengths.sum() == 0:
-            return pd.Series(np.zeros(len(tokens), dtype=np.int32))
-        flat = np.concatenate([np.asarray(t, dtype=np.int64) for t in tokens])
-        bad = ((flat < 0) | (flat >= vocab_size)).astype(np.int64)
-        ends = np.cumsum(lengths)
-        csum = np.concatenate([[0], np.cumsum(bad)])
-        starts = ends - lengths
-        per_row = csum[ends] - csum[starts]
-        return pd.Series(per_row.astype(np.int32))
-
-    return n_bad_tokens
-
-
-def token_len_mismatch_udf():
-    """pandas_udf: boolean n_tok != len(tokens) (null n_tok → null)."""
-
-    @F.pandas_udf(T.BooleanType())
-    def len_mismatch(tokens: pd.Series, n_tok: pd.Series) -> pd.Series:
-        lengths = tokens.map(len).astype("float64")
-        res = n_tok.astype("float64") != lengths
-        res[n_tok.isna()] = None
-        return res
-
-    return len_mismatch
-
-
-def token_hist_kernel(buckets: int, vocab_size: int):
-    """Factory for the ``mapInArrow`` kernel: per-batch token-bucket
-    histogram rows ``(part_id, bucket, cnt)`` — the histogram-of-arrays
-    case where exploding every token through an aggregation is the
-    bottleneck (measured 68s → ~4s at 280M tokens vs the explode plan).
-
-    Operates zero-copy on the Arrow ListArray buffers: the flat values
-    vector and the offsets vector go straight into numpy ``bincount`` —
-    no per-row Python, no pandas object conversion (the north star's
-    "vectorized Arrow UDFs, no per-row Python"). Each batch emits at
-    most ``n_partitions × buckets`` rows, so the shuffle moves
-    histograms, not tokens (the 10^12-row scale path).
-
-    Defined as a closure (not a module-level function) so cloudpickle
-    serializes it by value — executors need no package on PYTHONPATH.
-    """
-
-    def kernel(batch_iter):
-        import pyarrow as pa
-
-        for batch in batch_iter:
-            if batch.num_rows == 0:
-                continue
-            tokens = batch.column(batch.schema.get_field_index("tokens"))
-            part = batch.column(batch.schema.get_field_index("part_id"))
-            if isinstance(tokens, pa.ChunkedArray):
-                tokens = tokens.combine_chunks()
-            # zero-copy: flat token values + per-row lengths from offsets
-            flat = tokens.flatten().to_numpy(zero_copy_only=False)
-            offsets = tokens.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            lengths = np.diff(offsets)
-            if flat.size == 0:
-                continue
-            hist = _clean_token_hist(
-                flat,
-                lengths,
-                part.to_numpy(zero_copy_only=False),
-                np.ones(batch.num_rows, dtype=bool),
-                buckets,
-                vocab_size,
-                range_checked=False,
-            )
-            if hist is None:
-                continue
-            pid_out, bucket_out, cnt_out = hist
-            yield pa.record_batch(
-                {
-                    "part_id": pa.array(pid_out, type=pa.int32()),
-                    "bucket": pa.array(bucket_out, type=pa.int32()),
-                    "cnt": pa.array(cnt_out, type=pa.int64()),
-                }
-            )
-
-    return kernel
 
 
 ROW_CHECKS_ALL = ("null_n_tok", "len_mismatch", "token_range", "empty_tokens", "bad_source")
@@ -384,59 +281,3 @@ def featurize_hist_kernel(
 
     return kernel
 
-
-def checked_token_hist_kernel(
-    buckets: int,
-    vocab_size: int,
-    allowed_sources: tuple[str, ...],
-    checks: tuple[str, ...] = ROW_CHECKS_ALL,
-):
-    """``mapInArrow`` kernel that fuses the row-validity checks with the
-    token-bucket histogram: input batches carry (part_id, tokens, n_tok,
-    source); rows failing ANY check (null/len-mismatch/out-of-range/
-    empty/bad-source) are excluded from the histogram, all in vectorized
-    numpy over the zero-copy Arrow buffers. This makes the histogram the
-    ONLY pass that touches token bytes besides the featurize projection
-    — the validation suite decodes the token column exactly twice.
-    """
-
-    def kernel(batch_iter):
-        import pyarrow as pa
-
-        allowed = set(allowed_sources)
-        for batch in batch_iter:
-            if batch.num_rows == 0:
-                continue
-            tokens = batch.column(batch.schema.get_field_index("tokens"))
-            if isinstance(tokens, pa.ChunkedArray):
-                tokens = tokens.combine_chunks()
-            flat = tokens.flatten().to_numpy(zero_copy_only=False)
-            offsets = tokens.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            lengths = np.diff(offsets)
-            tok_valid = tokens.is_valid().to_numpy(zero_copy_only=False)
-            n_tok = batch.column(batch.schema.get_field_index("n_tok")).to_numpy(
-                zero_copy_only=False
-            ).astype(np.float64)  # NaN for nulls
-            part = batch.column(batch.schema.get_field_index("part_id")).to_numpy(
-                zero_copy_only=False
-            )
-
-            n_bad = _n_bad_per_row(flat, lengths, vocab_size)
-            src_ok = _src_ok_mask(batch.column(batch.schema.get_field_index("source")), allowed)
-            clean = _clean_mask(checks, n_tok, lengths, tok_valid, n_bad, src_ok)
-            hist = _clean_token_hist(
-                flat, lengths, part, clean, buckets, vocab_size,
-                range_checked="token_range" in checks,
-            )
-            if hist is None:
-                continue
-            pid_out, bucket_out, cnt_out = hist
-            yield pa.record_batch(
-                {
-                    "part_id": pa.array(pid_out, type=pa.int32()),
-                    "bucket": pa.array(bucket_out, type=pa.int32()),
-                    "cnt": pa.array(cnt_out, type=pa.int64()),
-                }
-            )
-
-    return kernel

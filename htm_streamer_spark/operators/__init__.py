@@ -8,8 +8,6 @@ from htm_streamer_spark.operators.stats import partition_stats
 from htm_streamer_spark.operators.uniqueness import duplicate_ids, duplicate_violations
 from htm_streamer_spark.operators.drift import (
     ntok_histogram,
-    token_histogram,
-    token_histogram_checked,
     drift_scores,
 )
 
@@ -17,12 +15,10 @@ __all__ = [
     "featurize",
     "row_check_flags",
     "row_violations",
-    "token_histogram_checked",
     "partition_stats",
     "duplicate_ids",
     "duplicate_violations",
     "referential_violations",
-    "token_histogram",
     "ntok_histogram",
     "drift_scores",
 ]

@@ -5,11 +5,14 @@ fit + tail probability, /root/reference/htm_streamer/data/
 anomalylikelihood.py:424-467,718-788) with distribution distances computed
 per partition against a checkpointed baseline:
 
-- token-frequency histogram: each row's token-bucket ids counted per
-  partition — in the flagship by the fused Arrow kernel, which emits
+- token-frequency histogram: each clean row's token-bucket ids counted
+  per partition by the fused Arrow kernel (``_token_pass``), which emits
   per-batch partial counts, so the shuffle moves histograms, not tokens.
-- n_tok histogram: one bucket per row, emitted by the same kernel pass
-  as a second histogram *family* (``FAMILIES``).
+- n_tok histogram: one bucket per clean row, emitted by the same kernel
+  pass as a second histogram *family* (``FAMILIES``).
+- the running verdicts and the baseline fit (``compute_baseline``) run
+  the same kernel, so both filter and bucket rows by one rule;
+  ``ntok_histogram`` is the native reference the tests compare it to.
 - PSI / KL with probability floors — the flooring mirrors the reference's
   mean/variance floors (anomalylikelihood.py:733-742) — scored for every
   family in one pass over sparse per-family bucket maps
@@ -30,58 +33,30 @@ from pyspark.sql import functions as F
 
 from htm_streamer_spark.config import HIST_EPS, NTOK_MAX, EngineConfig
 from htm_streamer_spark.functions.array_funcs import (
-    checked_token_hist_kernel,
+    featurize_hist_kernel,
     ntok_bucket_expr,
-    token_bucket_expr,
-    token_hist_kernel,
 )
 
 # drift histogram families; a family's id is its index here
 FAMILIES = ("tok", "ntok")
 
 
-def token_histogram(df: DataFrame, cfg: EngineConfig, impl: str = "arrow") -> DataFrame:
-    """Per-partition token-bucket histogram: (part_id, bucket, cnt).
-
-    ``impl='arrow'`` (default): mapInArrow pre-aggregation over the
-    zero-copy ListArray buffers — each Arrow batch emits at most
-    n_parts×buckets rows, bounding executor→shuffle traffic independent
-    of tokens-per-row, and numpy bincount replaces 280M exploded rows
-    through codegen (measured ~15x at sf0.1). The 100 TB path; also the
-    north star's histogram-of-arrays Arrow UDF.
-    ``impl='native'``: transform tokens→buckets then explode + count
-    (codegen, partial agg) — kept as the pure-JVM fallback and as the
-    cross-check in tests.
-    """
-    if impl == "arrow":
-        hist = df.select("part_id", "tokens").mapInArrow(
-            token_hist_kernel(cfg.tok_hist_buckets, cfg.vocab_size),
-            schema="part_id int, bucket int, cnt long",
-        )
-        return hist.groupBy("part_id", "bucket").agg(F.sum("cnt").alias("cnt"))
-    bucketed = df.select(
-        "part_id",
-        F.explode(
-            F.transform(
-                F.col("tokens"),
-                lambda t: token_bucket_expr(t, cfg.tok_hist_buckets, cfg.vocab_size),
-            )
-        ).alias("bucket"),
-    )
-    return bucketed.groupBy("part_id", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def token_histogram_checked(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Token-bucket histogram over CLEAN rows only, with the row checks
-    fused into the Arrow kernel (no separate flag pass over tokens).
-    Input: the raw sequences frame. Output: (part_id, bucket, cnt)."""
-    hist = df.select("part_id", "tokens", "n_tok", "source").mapInArrow(
-        checked_token_hist_kernel(
-            cfg.tok_hist_buckets, cfg.vocab_size, cfg.allowed_sources, cfg.checks
+def _token_pass(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """The one decode of the token bytes: ``featurize_hist_kernel`` over
+    ``df``, unpersisted. ``kind=0`` rows are the narrow per-row frame,
+    ``kind=1`` rows the per-batch partial counts (part_id, family,
+    bucket, cnt) of the clean-row histograms of both drift families."""
+    return df.select("doc_id", "part_id", "n_tok", "source", "ts", "tokens").mapInArrow(
+        featurize_hist_kernel(
+            cfg.tok_hist_buckets, cfg.vocab_size, cfg.ntok_hist_buckets, NTOK_MAX,
+            cfg.allowed_sources, cfg.checks,
         ),
-        schema="part_id int, bucket int, cnt long",
+        schema=(
+            "kind tinyint, doc_id string, part_id int, n_tok int, source string, "
+            "ts timestamp, tok_len int, tok_oob boolean, family tinyint, bucket int, "
+            "cnt long"
+        ),
     )
-    return hist.groupBy("part_id", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def featurize_and_token_histogram(
@@ -96,19 +71,7 @@ def featurize_and_token_histogram(
     indexes ``FAMILIES``. The kernel output is persisted; both returned
     frames are filters over it, so the token column is decoded exactly
     once per suite run."""
-    from htm_streamer_spark.functions.array_funcs import featurize_hist_kernel
-
-    out = df.select("doc_id", "part_id", "n_tok", "source", "ts", "tokens").mapInArrow(
-        featurize_hist_kernel(
-            cfg.tok_hist_buckets, cfg.vocab_size, cfg.ntok_hist_buckets, NTOK_MAX,
-            cfg.allowed_sources, cfg.checks,
-        ),
-        schema=(
-            "kind tinyint, doc_id string, part_id int, n_tok int, source string, "
-            "ts timestamp, tok_len int, tok_oob boolean, family tinyint, bucket int, "
-            "cnt long"
-        ),
-    ).persist()
+    out = _token_pass(df, cfg).persist()
     narrow = out.filter(F.col("kind") == 0).select(
         "doc_id", "part_id", "n_tok", "source", "ts", "tok_len", "tok_oob"
     )

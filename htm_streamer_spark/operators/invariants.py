@@ -24,10 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from htm_streamer_spark.config import EngineConfig
-from htm_streamer_spark.functions.array_funcs import (
-    len_mismatch_expr,
-    token_oob_expr,
-)
+from htm_streamer_spark.functions.array_funcs import token_oob_expr
 
 ROW_CHECK_ORDER = ("null_n_tok", "len_mismatch", "token_range", "empty_tokens", "bad_source")
 
@@ -35,10 +32,10 @@ ROW_CHECK_ORDER = ("null_n_tok", "len_mismatch", "token_range", "empty_tokens", 
 def featurize(df: DataFrame, cfg: EngineConfig) -> DataFrame:
     """One projection over the token arrays → a NARROW frame carrying
     everything the row checks need (``tok_len``, ``tok_oob``) plus the
-    scalar columns. This is what gets persisted: caching the narrow
-    frame instead of the raw token arrays cuts cache traffic ~100x
-    (tokens are ~99% of the bytes) — at 10^12 rows the wide cache is
-    impossible, the narrow one is routine."""
+    scalar columns. The native form of the fused kernel's narrow frame
+    (``featurize_hist_kernel``'s ``kind=0`` rows), which the flagship
+    uses; callers holding a raw frame featurize it before the row
+    checks. The narrow frame is ~1% of the bytes (tokens are ~99%)."""
     return df.select(
         "doc_id",
         "part_id",
@@ -52,23 +49,19 @@ def featurize(df: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
 
 
-def row_check_exprs(cfg: EngineConfig, featurized: bool = False) -> dict[str, Column]:
-    """One boolean Column per enabled row-level check. ``featurized``
-    means the input already carries ``tok_len``/``tok_oob`` (from
-    :func:`featurize`) so no expression touches the token arrays."""
+def row_check_exprs(cfg: EngineConfig) -> dict[str, Column]:
+    """One boolean Column per enabled row-level check, over a frame that
+    carries ``tok_len``/``tok_oob`` (:func:`featurize` or the fused
+    kernel's narrow frame), so no expression touches the token arrays."""
     n_tok = F.col("n_tok")
-    tok_len = F.col("tok_len") if featurized else F.size("tokens")
-    if featurized:
-        tok_oob = F.col("tok_oob")
-    else:
-        tok_oob = F.coalesce(token_oob_expr(F.col("tokens"), cfg.vocab_size), F.lit(False))
+    tok_len = F.col("tok_len")
     exprs: dict[str, Column] = {}
     if "null_n_tok" in cfg.checks:
         exprs["null_n_tok"] = n_tok.isNull()
     if "len_mismatch" in cfg.checks:
         exprs["len_mismatch"] = n_tok.isNotNull() & (tok_len != n_tok)
     if "token_range" in cfg.checks:
-        exprs["token_range"] = tok_oob
+        exprs["token_range"] = F.col("tok_oob")
     if "empty_tokens" in cfg.checks:
         exprs["empty_tokens"] = F.coalesce(tok_len == 0, F.lit(True))
     if "bad_source" in cfg.checks:
@@ -78,9 +71,10 @@ def row_check_exprs(cfg: EngineConfig, featurized: bool = False) -> dict[str, Co
     return exprs
 
 
-def row_check_flags(df: DataFrame, cfg: EngineConfig, featurized: bool = False) -> DataFrame:
-    """Append one boolean flag column per check plus ``any_violation``."""
-    exprs = row_check_exprs(cfg, featurized)
+def row_check_flags(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Append one boolean flag column per check plus ``any_violation``
+    to a featurized frame."""
+    exprs = row_check_exprs(cfg)
     out = df
     for name, e in exprs.items():
         out = out.withColumn(f"flag_{name}", e)
@@ -91,14 +85,15 @@ def row_check_flags(df: DataFrame, cfg: EngineConfig, featurized: bool = False) 
     return out.withColumn("any_violation", any_v)
 
 
-def row_violations(df: DataFrame, cfg: EngineConfig, featurized: bool = False) -> DataFrame:
-    """Violation rows for all row-level checks in ONE pass.
+def row_violations(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Violation rows for all row-level checks in ONE pass over a
+    featurized frame.
 
     Builds an array of fired check_ids per row, filters to non-empty, then
     explodes — so the scan is read once for all five checks instead of
     once per check. Output: (doc_id, part_id, check_id, payload).
     """
-    exprs = row_check_exprs(cfg, featurized)
+    exprs = row_check_exprs(cfg)
     fired = F.filter(
         F.array(*[F.when(e, F.lit(name)) for name, e in exprs.items()]),
         lambda x: x.isNotNull(),

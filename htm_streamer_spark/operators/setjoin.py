@@ -100,10 +100,11 @@ def jaccard_similarity_join(
     exact. Returns (doc_a, doc_b, jaccard) with full-precision jaccard;
     round at the presentation layer.
 
-    ``broadcast_attach`` broadcasts the per-doc set frames into the
-    verification joins (right whenever the per-doc sketch rows fit an
-    executor — up to ~10^7 docs); at corpus scales beyond that pass
-    False and the verify attach becomes an ordinary shuffle join."""
+    ``broadcast_attach`` broadcasts the per-doc set frames and the
+    survivor ids into the verification joins (right whenever the
+    per-doc sketch rows fit an executor — up to ~10^7 docs); at corpus
+    scales beyond that pass False and every verify join becomes an
+    ordinary shuffle join."""
     t = float(threshold)
     if not 0.0 < t <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
@@ -261,10 +262,10 @@ def jaccard_similarity_join(
     # 2. EXACT confirm: the surviving pairs recompute jaccard on the
     #    string arrays — reported values never touch a hash, so
     #    collisions cost a re-check and can never change the answer.
-    # The per-doc hash frames ride broadcast joins (parameterised:
-    # broadcast_attach=False shuffle-joins at corpus scales beyond
-    # executor memory) so the candidate stream is never exchanged by
-    # doc id.
+    # The per-doc hash frames and the survivor ids ride broadcast joins
+    # (parameterised: broadcast_attach=False shuffle-joins every one of
+    # them at corpus scales beyond executor memory) so the candidate
+    # stream is never exchanged by doc id.
     _maybe_bc = F.broadcast if broadcast_attach else (lambda df: df)
     # persisted: both attach sides broadcast this frame — one
     # collect_list aggregation, not two
@@ -299,7 +300,7 @@ def jaccard_similarity_join(
     )
     sbase = (
         docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_txt"))
-        .join(F.broadcast(surv_ids), "_id", "left_semi")
+        .join(_maybe_bc(surv_ids), "_id", "left_semi")
         .select(
             "_id",
             F.split(normalized_text(F.col("_txt")), r"\s+").alias("_ws0"),

@@ -21,22 +21,22 @@ from htm_streamer_spark.config import EngineConfig
 from htm_streamer_spark.operators.invariants import row_check_exprs
 
 
-def partition_stats(df: DataFrame, cfg: EngineConfig, featurized: bool = False) -> DataFrame:
-    """One row per part_id with column stats + per-check violation counts.
+def partition_stats(df: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """One row per part_id of a featurized frame with column stats +
+    per-check violation counts.
 
     Columns: part_id, n_rows, n_tok_min, n_tok_max, n_tok_null_rate,
     n_tok_avg, approx_distinct_source, n_<check> per enabled row check,
     n_row_violations.
     """
-    exprs = row_check_exprs(cfg, featurized)
-    tok_len = F.col("tok_len") if featurized else F.size("tokens")
+    exprs = row_check_exprs(cfg)
     aggs = [
         F.count(F.lit(1)).alias("n_rows"),
         F.min("n_tok").alias("n_tok_min"),
         F.max("n_tok").alias("n_tok_max"),
         F.avg(F.col("n_tok").isNull().cast("double")).alias("n_tok_null_rate"),
         F.avg("n_tok").alias("n_tok_avg"),
-        F.sum(tok_len.cast("long")).alias("total_tokens"),
+        F.sum(F.col("tok_len").cast("long")).alias("total_tokens"),
         F.approx_count_distinct("source").alias("approx_distinct_source"),
     ]
     any_v = None

@@ -131,10 +131,12 @@ def embedding_dim_profile(
     # order functions never codegen), turning a 2-pass fold into a
     # 2*dim-pass one. element_at on a NULL array is NULL, preserving
     # the per-dim skip semantics of the old when(ok, ...) guard. The
-    # narrow projection is also fanned out (guide §2.5; single-row-
-    # group inputs otherwise serialize the whole aggregate map side).
-    guarded = fan_out_narrow_scans(
-        df.select(F.col(group_by), F.when(ok, vd).alias("_e"))
+    # raw (group, vector) columns are fanned out first and the
+    # transform derived above the repartition (guide §2.5; single-row-
+    # group inputs otherwise run it and the aggregate map side on one
+    # core).
+    guarded = fan_out_narrow_scans(df.select(group_by, vec_col)).select(
+        F.col(group_by), F.when(ok, vd).alias("_e")
     )
     cell = lambda j: F.element_at(F.col("_e"), j + 1)  # noqa: E731
     aggs = []
@@ -217,11 +219,16 @@ def embedding_isotropy(
     )
     from htm_streamer_spark.operators.dedup import fan_out_narrow_scans
 
-    # fan out the narrow projection: the 3*dim aggregate expressions
-    # inherit the scan's split count (guide §2.5; no-op at real scale)
-    valid = fan_out_narrow_scans(
-        df.where(ok).select(group_by, vd.alias("_e"), norm.alias("_nrm"))
-    ).where(F.col("_nrm") > 0)
+    # fan out the raw (group, vector) columns, then derive _e/_nrm
+    # above the repartition: the validity gate, the cast and the norm
+    # fold and the 3*dim aggregate expressions otherwise inherit the
+    # scan's split count (guide §2.5; no-op at real scale)
+    valid = (
+        fan_out_narrow_scans(df.select(group_by, vec_col))
+        .where(ok)
+        .select(group_by, vd.alias("_e"), norm.alias("_nrm"))
+        .where(F.col("_nrm") > 0)
+    )
     cell = lambda j: F.element_at(F.col("_e"), j + 1)  # noqa: E731
     aggs = [
         F.count(F.lit(1)).cast("long").alias("n_valid"),

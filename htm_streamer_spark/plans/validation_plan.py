@@ -4,8 +4,9 @@ Batch lifecycle (reference analog: the 3-mode state machine
 sampling → initializing → running, /root/reference/htm_streamer/config/
 config.py:199-225 and pipeline/htm_stream.py:76-147):
 
-1. *sampling/initializing*: fit baseline histograms on the first K clean
-   partitions (≙ the reference accumulating ``features_samples`` then
+1. *sampling/initializing*: fit baseline histograms on the clean rows of
+   the first K partitions, from the same fused kernel the running phase
+   reads (≙ the reference accumulating ``features_samples`` then
    deriving encoder ranges, config/config.py:178-196,64-79).
 2. *running*: per-partition stats + invariant counts (one fused agg),
    violation rows (one explode pass + salted uniqueness + broadcast
@@ -33,20 +34,18 @@ from pyspark.sql import functions as F
 
 from htm_streamer_spark.config import EngineConfig, validate_input_schema
 from htm_streamer_spark.operators.drift import (
+    FAMILIES,
+    _token_pass,
     drift_scores,
     family_hist,
     featurize_and_token_histogram,
-    ntok_histogram,
-    token_histogram_checked,
 )
-from htm_streamer_spark.operators.invariants import (
-    featurize,
-    row_check_flags,
-    row_violations,
-)
-from htm_streamer_spark.operators.referential import dim_sources_df
+from htm_streamer_spark.operators.invariants import row_violations
 from htm_streamer_spark.operators.stats import partition_stats
-from htm_streamer_spark.operators.uniqueness import duplicate_violations
+from htm_streamer_spark.operators.uniqueness import (
+    duplicate_content_violations,
+    duplicate_violations,
+)
 
 
 @dataclass
@@ -77,39 +76,37 @@ def compute_baseline(
     df: DataFrame, cfg: EngineConfig, base_parts: list[int] | None = None
 ) -> dict[str, DataFrame]:
     """Baseline token + n_tok histograms over clean rows of the baseline
-    partitions. Returns {'tok': DF(bucket,cnt), 'ntok': DF(bucket,cnt),
-    'part_ids': list}."""
+    partitions: the fused kernel's histogram rows for those partitions,
+    summed per (family, bucket). Nothing is persisted. Returns
+    {'tok': DF(bucket,cnt), 'ntok': DF(bucket,cnt), 'part_ids': list}."""
     if base_parts is None:
         base_parts = baseline_part_ids(df, cfg)
-    sub = df.filter(F.col("part_id").isin(base_parts))
-    tok = (
-        token_histogram_checked(sub, cfg)
-        .groupBy("bucket")
+    hist = (
+        _token_pass(df.filter(F.col("part_id").isin(base_parts)), cfg)
+        .filter(F.col("kind") == 1)
+        .groupBy("family", "bucket")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    clean = row_check_flags(featurize(sub, cfg), cfg, featurized=True).filter(
-        ~F.col("any_violation")
-    )
-    ntok = ntok_histogram(clean, cfg).groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
-    return {"tok": tok, "ntok": ntok, "part_ids": base_parts}
+    out = {
+        name: hist.filter(F.col("family") == f).select("bucket", "cnt")
+        for f, name in enumerate(FAMILIES)
+    }
+    return {**out, "part_ids": base_parts}
 
 
-def all_violations(
-    df: DataFrame, cfg: EngineConfig, featurized: bool = False
-) -> DataFrame:
+def all_violations(df: DataFrame, narrow: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Union of row-level + uniqueness violation rows (referential is a
     row-level ``isin`` check by default; see operators/referential.py
-    for the dimension-table broadcast form)."""
-    parts = [row_violations(df, cfg, featurized)]
+    for the dimension-table broadcast form). ``narrow`` is ``df``'s
+    per-row feature frame (``featurize`` or the fused kernel's); every
+    check reads it except the opt-in content check, which hashes the
+    token arrays of ``df``."""
+    parts = [row_violations(narrow, cfg)]
     if "dup_doc_id" in cfg.checks:
-        parts.append(duplicate_violations(df, cfg))
+        parts.append(duplicate_violations(narrow, cfg))
     if "dup_content" in cfg.checks:
         # opt-in (not in the default tuple): same token array under >=2
         # distinct doc_ids — see operators/uniqueness.py
-        from htm_streamer_spark.operators.uniqueness import (
-            duplicate_content_violations,
-        )
-
         parts.append(duplicate_content_violations(df, cfg))
     out = parts[0]
     for p in parts[1:]:
@@ -146,9 +143,9 @@ def run_validation_batch(
 
     # violations are ~2% of rows — persist so the verdict count and the
     # returned violation rows share one computation
-    viols = all_violations(narrow, cfg, featurized=True).persist()
+    viols = all_violations(df, narrow, cfg).persist()
     n_viol = viols.groupBy("part_id").agg(F.count(F.lit(1)).alias("n_violations"))
-    stats = partition_stats(narrow, cfg, featurized=True)
+    stats = partition_stats(narrow, cfg)
 
     # stats, n_viol and drift all arrive hash-partitioned by part_id, so
     # a merge join reads n_viol in place; AQE's runtime switch to a

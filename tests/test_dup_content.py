@@ -8,8 +8,9 @@ from __future__ import annotations
 import pytest
 
 from htm_streamer_spark.config import SEQUENCES_SCHEMA, EngineConfig
+from htm_streamer_spark.operators.invariants import featurize
 from htm_streamer_spark.operators.uniqueness import duplicate_content_violations
-from htm_streamer_spark.plans.validation_plan import all_violations
+from htm_streamer_spark.plans.validation_plan import all_violations, run_validation_batch
 
 
 @pytest.fixture(scope="module")
@@ -47,15 +48,28 @@ def test_same_id_repeats_are_not_content_dups(spark, seqs):
 def test_opt_in_via_checks_tuple(spark, seqs):
     base = EngineConfig()
     assert "dup_content" not in base.checks  # off by default
-    default_rows = all_violations(seqs, base).toPandas()
+    default_rows = all_violations(seqs, featurize(seqs, base), base).toPandas()
     assert "dup_content" not in set(default_rows["check_id"])
     on = EngineConfig(checks=base.checks + ("dup_content",))
-    rows_on = all_violations(seqs, on).toPandas()
+    rows_on = all_violations(seqs, featurize(seqs, on), on).toPandas()
     dup_rows = rows_on[rows_on["check_id"] == "dup_content"]
     assert sorted(dup_rows["doc_id"]) == ["a1", "a2", "a3"]
     # everything else unchanged
     rest = rows_on[rows_on["check_id"] != "dup_content"]
     assert len(rest) == len(default_rows)
+
+
+def test_flagship_run_flags_shared_content(spark, seqs):
+    """The flagship hands its row checks the fused kernel's narrow frame,
+    which has no token arrays; the opted-in content check must still
+    read them from the input."""
+    on = EngineConfig(checks=EngineConfig().checks + ("dup_content",))
+    res = run_validation_batch(spark, seqs, on)
+    got = res.violations.filter("check_id = 'dup_content'").toPandas()
+    assert sorted(got["doc_id"]) == ["a1", "a2", "a3"]
+    verdicts = {r["part_id"]: r["verdict"] for r in res.verdicts.collect()}
+    assert verdicts == {0: "fail", 1: "fail"}
+    spark.catalog.clearCache()
 
 
 def test_unknown_check_still_rejected():

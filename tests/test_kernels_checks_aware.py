@@ -1,30 +1,28 @@
-"""Fused Arrow kernels must honor cfg.checks and null-token semantics.
+"""The fused Arrow kernel must honor cfg.checks and null-token semantics.
 
 Regression tests for two divergences: (1) the fused clean mask used to
 hard-code all five row checks while the native path honored cfg.checks,
 so disabling a check changed the clean-row histograms only on one path;
 (2) null token arrays flattened to length 0 in Arrow (firing
 len_mismatch/empty) while native F.size(NULL) is NULL. Both histogram
-families the fused kernel emits (tokens and n_tok) are checked against
-their native paths.
+families the kernel emits (tokens and n_tok) are checked against their
+native references, for the flagship pass and for the baseline fit.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from htm_streamer_spark.config import SEQUENCES_SCHEMA, EngineConfig
 from htm_streamer_spark.operators.drift import (
     FAMILIES,
     featurize_and_token_histogram,
     ntok_histogram,
-    token_histogram_checked,
 )
 from htm_streamer_spark.operators.invariants import featurize, row_check_flags
 from htm_streamer_spark.functions.array_funcs import token_bucket_expr
+from htm_streamer_spark.plans.validation_plan import compute_baseline
 
 
 @pytest.fixture(scope="module")
@@ -46,10 +44,13 @@ def messy(spark):
     return spark.createDataFrame(rows, schema=SEQUENCES_SCHEMA)
 
 
-def _native_clean_hist(df, cfg):
-    """The non-fused reference: native flags -> filter -> explode/count."""
-    clean = row_check_flags(df, cfg).filter(~F.col("any_violation"))
-    return (
+def _native_hists(df, cfg):
+    """The non-fused references, keyed by ``FAMILIES`` name: native
+    flags -> filter -> explode/count for tokens, ``ntok_histogram`` for
+    n_tok. Rows are (part_id, bucket, cnt)."""
+    flags = row_check_flags(featurize(df, cfg), cfg).select("doc_id", "any_violation")
+    clean = df.join(flags, "doc_id").filter(~F.col("any_violation"))
+    tok = (
         clean.select(
             "part_id",
             F.explode(
@@ -62,6 +63,7 @@ def _native_clean_hist(df, cfg):
         .groupBy("part_id", "bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
+    return {"tok": tok, "ntok": ntok_histogram(clean, cfg)}
 
 
 def _collect(df) -> list[tuple]:
@@ -79,10 +81,18 @@ CHECK_SETS = [
 
 @pytest.mark.parametrize("checks", CHECK_SETS, ids=["all", "len", "range+src", "empty", "null+src"])
 def test_checked_hist_matches_native_per_checkset(spark, messy, checks):
+    """The baseline fit reads the flagship's kernel: its per-family
+    histograms equal the native references summed over part_id, and it
+    persists nothing."""
     cfg = EngineConfig(checks=checks)
-    fused = token_histogram_checked(messy, cfg)
-    native = _native_clean_hist(messy, cfg)
-    assert _collect(fused) == _collect(native)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    base = compute_baseline(messy, cfg, [0, 1])
+    assert base["part_ids"] == [0, 1]
+    for name, native in _native_hists(messy, cfg).items():
+        want = native.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
+        assert _collect(base[name]) == _collect(want), name
+    assert set(jsc.getPersistentRDDs().keySet()) == before
 
 
 def _release(spark):
@@ -97,10 +107,7 @@ def _release(spark):
 def test_fused_featurize_hist_matches_native_per_checkset(spark, messy, checks):
     cfg = EngineConfig(checks=checks)
     _, hist = featurize_and_token_histogram(messy, cfg)
-    clean = row_check_flags(featurize(messy, cfg), cfg, featurized=True).filter(
-        ~F.col("any_violation")
-    )
-    native = {"tok": _native_clean_hist(messy, cfg), "ntok": ntok_histogram(clean, cfg)}
+    native = _native_hists(messy, cfg)
     for family, name in enumerate(FAMILIES):
         got = (
             hist.filter(F.col("family") == family)

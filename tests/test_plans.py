@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from htm_streamer_spark.config import EngineConfig
+from htm_streamer_spark.operators.invariants import featurize, row_violations
 from htm_streamer_spark.operators.referential import dim_sources_df, referential_violations
 from htm_streamer_spark.operators.stats import partition_stats
 from htm_streamer_spark.operators.uniqueness import duplicate_violations
@@ -48,7 +49,7 @@ def test_column_pruning(spark, tiny_dir):
 
 
 def test_stats_single_shuffle_partial_agg(seq, cfg):
-    plan = _plan(partition_stats(seq, cfg))
+    plan = _plan(partition_stats(featurize(seq, cfg), cfg))
     # exactly one exchange: map-side partial agg merges before the shuffle
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "partial_" in plan.lower() or "HashAggregate" in plan, plan
@@ -79,9 +80,7 @@ def test_duplicate_joinback_strategy_is_aqe_chosen(seq, cfg):
 
 
 def test_row_checks_whole_stage_codegen(seq, cfg):
-    from htm_streamer_spark.operators.invariants import row_violations
-
-    plan = _plan(row_violations(seq, cfg))
+    plan = _plan(row_violations(featurize(seq, cfg), cfg))
     # '*(n)' prefixes mark whole-stage-codegen'd operators
     assert "*(" in plan, plan
     # no python UDF in the hot path
@@ -90,9 +89,7 @@ def test_row_checks_whole_stage_codegen(seq, cfg):
 
 def test_exists_not_fullscan_of_other_columns(seq, cfg):
     """The violations projection must read only the columns it needs."""
-    from htm_streamer_spark.operators.invariants import row_violations
-
-    plan = _plan(row_violations(seq, cfg))
+    plan = _plan(row_violations(featurize(seq, cfg), cfg))
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "ts" not in read_schema, read_schema
 

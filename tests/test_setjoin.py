@@ -82,6 +82,23 @@ def test_superset_of_lsh_at_same_threshold(spark):
     assert exact, "sf0.001 corpus should contain near-dup pairs"
 
 
+@pytest.mark.parametrize("mode", ["words", "shingles"])
+def test_broadcast_attach_off_same_pairs_no_hint(spark, mode):
+    """``broadcast_attach=False`` is the escape hatch for corpora whose
+    per-doc frames outgrow executor memory: the same pairs, and no
+    broadcast hint on any join. The analyzed plan is checked too: the
+    optimized plan replaces the persisted survivor sets, and the hints
+    beneath them, by their cached relations."""
+    df = spark.createDataFrame(DOCS, ["doc_id", "text"])
+    on = jaccard_similarity_join(df, 0.5, mode=mode)
+    off = jaccard_similarity_join(df, 0.5, mode=mode, broadcast_attach=False)
+    assert sorted(off.collect()) == sorted(on.collect())
+    assert "strategy=broadcast" in on._jdf.queryExecution().optimizedPlan().toString()
+    qe = off._jdf.queryExecution()
+    for plan in (qe.optimizedPlan(), qe.analyzed()):
+        assert "strategy=broadcast" not in plan.toString()
+
+
 def test_threshold_validation(spark):
     df = spark.createDataFrame(DOCS[:2], ["doc_id", "text"])
     with pytest.raises(ValueError):

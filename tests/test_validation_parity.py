@@ -88,34 +88,3 @@ def test_clean_table_all_pass_after_probation(spark, clean_dir, cfg):
     rest = [p for p in verd.index if p not in base]
     assert (verd.loc[rest, "verdict"] == "pass").all()
 
-
-def test_pandas_udf_variants_match_native(spark, tiny_dir, cfg):
-    """The Arrow pandas-UDF alternates (§2.10 'vectorized Arrow UDFs')
-    agree with the native expressions on every row."""
-    from pyspark.sql import functions as F
-
-    from htm_streamer_spark.functions.array_funcs import (
-        n_bad_tokens_udf,
-        token_len_mismatch_udf,
-    )
-    from htm_streamer_spark.plans.validation_plan import load_sequences
-
-    df = load_sequences(spark, tiny_dir)
-    checked = df.select(
-        "doc_id",
-        n_bad_tokens_udf(cfg.vocab_size)(F.col("tokens")).alias("udf_bad"),
-        F.size(
-            F.filter(
-                F.col("tokens"), lambda t: (t < 0) | (t >= F.lit(cfg.vocab_size))
-            )
-        ).alias("native_bad"),
-        token_len_mismatch_udf()(F.col("tokens"), F.col("n_tok")).alias("udf_mismatch"),
-        (F.col("n_tok").isNotNull() & (F.size("tokens") != F.col("n_tok"))).alias(
-            "native_mismatch"
-        ),
-    )
-    bad = checked.filter(
-        (F.col("udf_bad") != F.col("native_bad"))
-        | (F.coalesce("udf_mismatch", F.lit(False)) != F.col("native_mismatch"))
-    )
-    assert bad.count() == 0
