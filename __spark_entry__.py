@@ -1173,10 +1173,9 @@ FROM newsnap GROUP BY 1
 
 
 def q_running_zscore_events(spark, sf_dir):
-    """Expanding-window z-score per user (streaming/tws.py batch twin —
-    the exact semantics the transformWithStateInPandas processor runs
-    live, state TTL aside): prior-row cumulative moments as ONE window
-    chain, single shuffle on user_id, O(n) running sums."""
+    """Expanding-window z-score per user (streaming/tws.py): prior-row
+    cumulative moments as ONE window chain, single shuffle on user_id,
+    O(n) running sums."""
     from htm_streamer_spark.streaming.tws import running_zscore_batch
 
     e = _t(spark, sf_dir, "events")
@@ -9880,8 +9879,7 @@ def q_cms_est_events(spark, sf_dir):
     (rank by exact count, ties by user_id) — (user_id, exact_cnt, est)
     with est = min over the 4 seeded-md5 cells, never below exact_cnt.
     The FREQUENCY member of the sketch tier (KMV = distinct, Bloom =
-    membership): additive counters merge across partitions and
-    micro-batches (streaming/cms.py is the same cells, pinned in
+    membership): additive counters merge across partitions (pinned in
     tests/test_cms.py). Build is one scan -> explode 4 positions ->
     map-side-combinable sum into <=2048 cells; the estimate join
     broadcasts the metadata-sized sketch. Deterministic md5-60bit

@@ -158,7 +158,3 @@ def filter_likelihoods(
             out[i] = yellow_t
     return 1.0 - out
 
-
-def log_likelihood(likelihood: np.ndarray) -> np.ndarray:
-    """computeLogLikelihood (anomalylikelihood.py:299-309)."""
-    return np.log(1.0000000001 - np.asarray(likelihood)) / -23.02585084720009

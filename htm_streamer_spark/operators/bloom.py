@@ -30,8 +30,9 @@ Spark-first construction — both halves are distributed:
   never disagree. The bit array rides a SparkContext broadcast (torrent
   protocol on a real cluster: one copy per executor, not per task).
 
-Spark's own runtime bloom filters (``plans/runtime_filters.py``) do
-this opportunistically for equi-joins when thresholds allow; this
+Spark's own runtime bloom filters
+(``spark.sql.optimizer.runtime.bloomFilter.enabled``) do this
+opportunistically for equi-joins when thresholds allow; this
 module is the EXPLICIT form — deterministic hash construction, caller-
 controlled size, usable where no equi-join exists yet (the gate runs
 before the join is even declared), and testable bit-for-bit.

@@ -9,9 +9,8 @@ size: item x increments cell (i, h_i(x)) in each of d rows; the
 estimate ``min_i cells[i][h_i(x)]`` is never below the true count and
 overshoots by more than εN (ε = e/w) with probability at most δ
 (δ = e^−d). ``heavy.py``'s Misra-Gries path gives EXACT top-k in two
-passes; CMS is the one-pass / streaming twin — additive counters make
-it mergeable across partitions AND invariant to arrival order and
-micro-batch chunking (``streaming/cms.py`` exploits exactly that).
+passes; CMS is the one-pass twin — additive counters make it mergeable
+across partitions AND invariant to arrival order and chunking.
 
 Everything is deterministic — positions come from the md5-60bit hash
 convention proven cross-engine in the SimHash/KMV oracles, seeded per
@@ -68,7 +67,7 @@ def cms_sketch(
     ``count_col`` when given). One scan, one map-side-combinable
     groupBy — at most d·w output rows whatever the input cardinality.
     Counters are ADDITIVE, so sketches of disjoint slices merge by
-    summing cells — the property the streaming twin rests on."""
+    summing cells."""
     from htm_streamer_spark.operators.dedup import fan_out_narrow_scans
 
     wgt = F.col(count_col).cast("long") if count_col else F.lit(1).cast("long")

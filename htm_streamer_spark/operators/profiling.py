@@ -167,7 +167,7 @@ def json_key_profile(
 ) -> DataFrame:
     """Top-level key-presence profile of a JSON string column — the
     SEMI-STRUCTURED member of the schema-drift family:
-    ``schema_drift`` watches declared columns, this watches the keys
+    ``validate_input_schema`` gates declared columns, this watches the keys
     hiding inside a properties blob (the place upstream teams add,
     rename, and drop fields without telling anyone). A key whose
     presence_rate decays is being abandoned; a new key appearing is an

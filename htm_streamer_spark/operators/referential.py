@@ -41,16 +41,3 @@ def referential_violations(df: DataFrame, dim: DataFrame) -> DataFrame:
         )
     )
 
-
-def source_coverage(df: DataFrame, dim: DataFrame) -> DataFrame:
-    """Per-source row counts with a membership flag — the semi-join-shaped
-    summary (reference analog: per-dataset label coverage). Aggregates
-    BEFORE joining so the broadcast join sees |distinct sources| rows,
-    not the fact table."""
-    per_source = df.groupBy("source").agg(F.count(F.lit(1)).alias("n_rows"))
-    allowed = dim.filter(F.col("active")).select("source", F.lit(True).alias("is_allowed"))
-    return (
-        per_source.join(F.broadcast(allowed), "source", "left")
-        .withColumn("is_allowed", F.coalesce(F.col("is_allowed"), F.lit(False)))
-        .select("source", "n_rows", "is_allowed")
-    )

@@ -47,44 +47,7 @@ from pyspark.sql import functions as F
 
 from .dedup import _gram_array, fan_out_narrow_scans, normalized_text
 
-__all__ = ["token_sets", "jaccard_similarity_join"]
-
-
-def token_sets(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mode: str = "shingles",
-    n: int = 3,
-) -> DataFrame:
-    """(_id, ws, sz): the sorted distinct token set per document; docs
-    with an empty set are dropped (they can never reach any positive
-    threshold). ``mode='shingles'`` builds the same word n-grams the
-    MinHash tier hashes (``dedup.shingles``); ``mode='words'`` uses the
-    plain word set."""
-    if mode not in ("shingles", "words"):
-        raise ValueError(f"mode must be 'shingles' or 'words', got {mode!r}")
-    # word array materialized in its own projection (_gram_array
-    # references it 4x), and the set frame PERSISTED before the
-    # emptiness filter: a filter above the derived array is otherwise
-    # predicate-pushed through the projections, re-inlining the whole
-    # tokenize+gram+sort chain as a per-row scan filter (measured 36
-    # duplicated subtrees in the optimized plan; see dedup.shingles).
-    # The cache boundary is the pushdown barrier — and every caller of
-    # this frame (prefix explode, both join-backs) reuses it anyway.
-    base = docs.select(
-        F.col(id_col).alias("_id"),
-        F.split(normalized_text(F.col(text_col)), r"\s+").alias("_ws0"),
-    )
-    toks = _gram_array(F.col("_ws0"), n) if mode == "shingles" else F.col("_ws0")
-    ws = F.array_sort(
-        F.array_distinct(F.filter(toks, lambda x: F.length(x) > 0))
-    )
-    sets = base.select("_id", ws.alias("ws")).persist()
-    return (
-        sets.withColumn("sz", F.size("ws"))
-        .filter(F.col("sz") > 0)
-    )
+__all__ = ["jaccard_similarity_join"]
 
 
 def jaccard_similarity_join(

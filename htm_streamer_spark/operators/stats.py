@@ -51,22 +51,6 @@ def partition_stats(df: DataFrame, cfg: EngineConfig) -> DataFrame:
     return df.groupBy("part_id").agg(*aggs)
 
 
-def column_profile(df: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Whole-table column profile (global analog of partition_stats;
-    reference analog: the sampling-phase min/max that seeds encoder ranges,
-    config/config.py:64-72). Single global agg — partial-merged, constant
-    output size."""
-    return df.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("n_tok").alias("n_tok_min"),
-        F.max("n_tok").alias("n_tok_max"),
-        F.avg(F.col("n_tok").isNull().cast("double")).alias("n_tok_null_rate"),
-        F.percentile_approx("n_tok", [0.5, 0.95, 0.99], 10000).alias("n_tok_pcts"),
-        F.approx_count_distinct("doc_id").alias("approx_distinct_doc_id"),
-        F.approx_count_distinct("source").alias("approx_distinct_source"),
-    )
-
-
 def winsorize(
     df: DataFrame,
     value_col: str,

@@ -21,8 +21,8 @@ then scored for every family at once — two exchanges on the partition
 side, two plus one broadcast on the baseline side — and the stats,
 violation-count and drift frames, all hash-partitioned by part_id, meet
 in merge joins without another exchange. Whether the baseline
-is fitted from the batch itself or passed in (the incremental and
-streaming drivers), it takes the same ``drift_scores`` path.
+is fitted from the batch itself or passed in (the incremental
+driver), it takes the same ``drift_scores`` path.
 """
 
 from __future__ import annotations

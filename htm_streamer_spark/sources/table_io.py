@@ -54,40 +54,6 @@ def list_hive_partitions(spark: SparkSession, path: str | Path, col: str = "part
     return sorted(out)
 
 
-def list_hive_partition_files(
-    spark: SparkSession, path: str | Path, col: str = "part_id"
-) -> dict[int, list[str]]:
-    """Data-file basenames per hive partition, from the same Hadoop
-    FileSystem listing as :func:`list_hive_partitions` (metadata calls
-    only — no Spark job). Underscore/dot-prefixed files (_SUCCESS,
-    .crc) are excluded, matching Spark's own data-file filter. The
-    streaming binding uses this as the partition-completeness oracle:
-    a partition is fully delivered once every listed file has appeared
-    in some committed micro-batch."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(str(path))
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return {}
-    out: dict[int, list[str]] = {}
-    prefix = f"{col}="
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith(prefix)):
-            continue
-        try:
-            pid = int(name[len(prefix):])
-        except ValueError:
-            continue
-        files = []
-        for f in fs.listStatus(status.getPath()):
-            fname = f.getPath().getName()
-            if f.isFile() and not fname.startswith(("_", ".")):
-                files.append(fname)
-        out[pid] = sorted(files)
-    return out
-
-
 def _footer_minmax(path: Path, cols: tuple[str, ...]) -> dict:
     """File-level [min, max] per requested column from the parquet
     FOOTER (row-group statistics aggregated across groups) — metadata
@@ -276,7 +242,7 @@ class ManifestCatalog:
         filter is still applied, so correctness never depends on the
         stats; they only cut the file list. Returns (df, report) where
         report carries files_total / files_read / files_skipped —
-        the evidence number, mirroring prune_stats in zorder.py."""
+        the evidence number."""
         entries = self.entries(table, latest_only, as_of=as_of)
         kept = []
         for e in entries:

@@ -1,164 +1,28 @@
-"""Per-key running z-score on the new-generation arbitrary-state API
-(``transformWithStateInPandas``, Spark 4.x), with TTL-evicted state.
+"""Per-key expanding-window z-score as one window expression chain,
+called by the ``running_zscore_events`` query.
 
-``streaming/stateful.py`` carries the full likelihood model on the
-older ``applyInPandasWithState``; this module demonstrates the
-successor API on the simplest useful stateful check — an expanding-
-window z-score per key — and the one thing the old API cannot do:
-**state TTL**. On an unbounded key domain (user ids, doc sources) the
-old API's state grows forever unless the operator hand-rolls
-timeouts; ``getValueState(..., ttlDurationMs=...)`` makes the state
-store itself evict keys idle longer than the TTL — the property that
-keeps per-key state bounded on a 100-TB/day stream where most keys
-go quiet.
+Semantics:
 
-Semantics (identical in the batch twin, tested to 1e-12):
-
-- rows of one key are processed in ``ts`` order (each micro-batch's
-  chunks are concatenated and sorted once, and a batch that starts
-  before the state's last seen ts raises — same ordering contract as
-  streaming/stateful.py);
+- rows of one key are ordered by ``ts`` (``order_cols`` break ties);
 - ``zscore`` for a row uses the mean/variance of all PRIOR rows of
-  that key (so the first two rows score 0 — a variance from <2
-  samples is undefined);
-- running moments are (count, sum, sum-of-squares) — associative,
-  so the state tuple is 3 doubles regardless of history length, and
-  the in-batch expansion is a vectorized cumsum, not per-row Python.
+  that key, so the first two rows score 0 (a variance from <2 samples
+  is undefined);
+- the variance is floored at ``VAR_FLOOR`` so a flat prefix cannot
+  divide by zero.
 
-Reference analog: the per-metric running mean/std the reference keeps
-in its anomaly-likelihood window (/root/reference/htm_streamer/
-pipeline/htm_stream_runner.py) — there a python dict per series,
-never evicted; here state-store rows with TTL.
-
-Sandbox note: LIVE transformWithState execution needs the RocksDB
-state store provider (set in the test) AND the ``protobuf`` package
-for the worker's state-server protocol — the latter is not shipped in
-this container, so the live test auto-skips (same pattern as the
-Iceberg jar). The kernel, the chunking contract, and the batch twin
-are fully tested; ``running_zscore_chunk`` is the entire semantics.
+Reference analog: the per-metric running mean/std of the reference's
+anomaly-likelihood window (pipeline/htm_stream_runner.py), a Python
+dict per series.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
-__all__ = [
-    "RunningZScoreProcessor",
-    "running_zscore_chunk",
-    "running_zscore_batch",
-    "tws_running_zscore",
-]
+__all__ = ["running_zscore_batch"]
 
-STATE_SCHEMA = "cnt bigint, s1 double, s2 double, last_ts double"
-OUT_SCHEMA = (
-    "key string, ts timestamp, value double, n_seen bigint, zscore double"
-)
 VAR_FLOOR = 1e-9
-
-
-def running_zscore_chunk(
-    state: Tuple[int, float, float, float] | None, pdf: pd.DataFrame
-) -> Tuple[Tuple[int, float, float, float], pd.DataFrame]:
-    """Pure kernel: fold one sorted chunk into (cnt, s1, s2, last_ts)
-    state; return updated state + the chunk with n_seen/zscore columns.
-    Vectorized — cumsum over the chunk, no per-row Python."""
-    cnt0, s10, s20, last0 = state if state is not None else (0, 0.0, 0.0, -np.inf)
-    ts = pdf["ts"].to_numpy()
-    if len(ts) and cnt0 > 0 and ts[0].astype("datetime64[us]").astype(np.int64) / 1e6 < last0:
-        raise ValueError(
-            "out-of-order micro-batch: starts before state's last ts "
-            "(route late data through a watermark+sort upstream)"
-        )
-    x = pdf["value"].to_numpy(dtype=np.float64)
-    cnt = cnt0 + np.arange(1, len(x) + 1)
-    s1 = s10 + np.cumsum(x)
-    s2 = s20 + np.cumsum(x * x)
-    # prior-row moments: shift the running tuples right by one
-    cnt_prev = np.concatenate(([cnt0], cnt[:-1]))
-    s1_prev = np.concatenate(([s10], s1[:-1]))
-    s2_prev = np.concatenate(([s20], s2[:-1]))
-    with np.errstate(invalid="ignore", divide="ignore"):
-        mean_prev = np.where(cnt_prev > 0, s1_prev / np.maximum(cnt_prev, 1), 0.0)
-        var_prev = np.where(
-            cnt_prev > 0,
-            s2_prev / np.maximum(cnt_prev, 1) - mean_prev * mean_prev,
-            0.0,
-        )
-        z = np.where(
-            cnt_prev >= 2,
-            (x - mean_prev) / np.sqrt(np.maximum(var_prev, VAR_FLOOR)),
-            0.0,
-        )
-    out = pdf.copy()
-    out["n_seen"] = cnt
-    out["zscore"] = z
-    new_last = (
-        ts[-1].astype("datetime64[us]").astype(np.int64) / 1e6 if len(ts) else last0
-    )
-    return (int(cnt0 + len(x)), float(s1[-1]) if len(x) else s10,
-            float(s2[-1]) if len(x) else s20, float(new_last)), out
-
-
-class RunningZScoreProcessor(StatefulProcessor):
-    """transformWithStateInPandas processor: one ValueState row per key
-    (3 running moments + last ts), TTL-evicted after ``ttl_ms`` idle."""
-
-    def __init__(self, ttl_ms: int | None = None):
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState(
-            "moments", STATE_SCHEMA, ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timer_values
-    ) -> Iterator[pd.DataFrame]:
-        # one key's micro-batch may arrive as several chunks in shuffle
-        # order: materialize + sort ONCE (bounded by rows-per-trigger)
-        pdf = pd.concat(list(rows), ignore_index=True).sort_values("ts")
-        prior = tuple(self._state.get()) if self._state.exists() else None
-        new_state, out = running_zscore_chunk(prior, pdf.reset_index(drop=True))
-        self._state.update(new_state)
-        out = out[["ts", "value", "n_seen", "zscore"]].copy()
-        out.insert(0, "key", key[0])
-        yield out
-
-    def close(self) -> None:
-        pass
-
-
-def tws_running_zscore(
-    stream_df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """Wire the processor onto a stream: groupBy(key) →
-    transformWithStateInPandas, append mode, processing-time clock
-    (required for TTL)."""
-    named = stream_df.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(ts_col).alias("ts"),
-        F.col(value_col).cast("double").alias("value"),
-    )
-    return named.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=RunningZScoreProcessor(ttl_ms=ttl_ms),
-        outputStructType=OUT_SCHEMA,
-        outputMode="append",
-        timeMode="ProcessingTime",
-    )
 
 
 def running_zscore_batch(
@@ -169,9 +33,9 @@ def running_zscore_batch(
     order_cols=(),
     keep_cols=(),
 ) -> DataFrame:
-    """Batch twin: identical semantics as one window expression chain —
-    prior-row cumulative moments per key. ``order_cols`` breaks ts
-    ties deterministically; ``keep_cols`` pass through untouched."""
+    """Prior-row cumulative moments per key as one window expression
+    chain. ``order_cols`` breaks ts ties deterministically;
+    ``keep_cols`` pass through untouched."""
     from pyspark.sql import Window
 
     w = (

@@ -1,33 +1,13 @@
-"""Count-Min sketch (operators/cms.py, streaming/cms.py): estimates
-never undershoot, the error bound holds, counters are additive (so any
-chunking/order reproduces the batch cells), and a weight-0 probe batch
-on the live stream reads batch-exact estimates without writing."""
+"""Count-Min sketch (operators/cms.py): estimates never undershoot, the
+error bound holds, counters are additive across slices, and weights
+add up."""
 
 import math
 
 import numpy as np
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
-from htm_streamer_spark.operators.cms import cms_estimate, cms_positions, cms_sketch
-from htm_streamer_spark.streaming.cms import cms_state_fn, streaming_cms
-
-
-class FakeState:
-    def __init__(self):
-        self._v = None
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
+from htm_streamer_spark.operators.cms import cms_estimate, cms_sketch
 
 
 def _items(n=5000, n_distinct=400, seed=3):
@@ -94,129 +74,3 @@ def test_weighted_counts(spark):
         .set_index("item")["est"]
     )
     assert est["a"] >= 7 and est["b"] >= 3
-
-
-def _spark_side(spark, pdf, d, w, group="g", weight=1):
-    pos = cms_positions(F.col("item"), d, w)
-    return (
-        spark.createDataFrame(pdf)
-        .select(
-            F.lit(group).alias("group"),
-            F.col("item"),
-            F.lit(weight).cast("long").alias("wt"),
-            *[p.alias(f"p{i}") for i, p in enumerate(pos)],
-        )
-        .toPandas()
-    )
-
-
-@pytest.mark.parametrize("chunks", [1, 4])
-@pytest.mark.parametrize("order", ["arrival", "shuffled"])
-def test_chunked_state_equals_batch_cells(spark, chunks, order):
-    d, w = 4, 256
-    pdf = _items(n=1500, n_distinct=200)
-    rows = _spark_side(spark, pdf, d, w)
-    if order == "shuffled":
-        rows = rows.sample(frac=1.0, random_state=11).reset_index(drop=True)
-    fn = cms_state_fn(d=d, w=w)
-    state = FakeState()
-    for chunk in np.array_split(rows, chunks):
-        list(fn(("g",), iter([chunk.reset_index(drop=True)]), state))
-    cells, n_seen = state.get
-    assert n_seen == len(pdf)
-    batch = cms_sketch(spark.createDataFrame(pdf), "item", d=d, w=w).toPandas()
-    want = np.zeros(d * w, dtype=np.int64)
-    for _, r in batch.iterrows():
-        want[int(r["row_idx"]) * w + int(r["col_idx"])] = int(r["cnt"])
-    assert np.array_equal(np.asarray(cells, dtype=np.int64), want)
-
-
-def test_weight_zero_probe_reads_without_writing(spark):
-    d, w = 4, 256
-    pdf = _items(n=1200, n_distinct=150)
-    fn = cms_state_fn(d=d, w=w)
-    state = FakeState()
-    list(fn(("g",), iter([_spark_side(spark, pdf, d, w)]), state))
-    before = state.get
-    probes = pd.DataFrame({"item": sorted(pdf["item"].unique())})
-    out = list(fn(("g",), iter([_spark_side(spark, probes, d, w, weight=0)]), state))
-    assert state.get[0] == before[0]  # counters untouched
-    got = out[-1].set_index("item")["est"]
-    sk = cms_sketch(spark.createDataFrame(pdf), "item", d=d, w=w)
-    want = (
-        cms_estimate(sk, spark.createDataFrame(probes), "item", d=d, w=w)
-        .toPandas()
-        .set_index("item")["est"]
-    )
-    for item in probes["item"]:
-        assert int(got[item]) == int(want[item])
-
-
-def test_live_streaming_query_matches_batch(spark, tmp_path):
-    d, w = 4, 128
-    pdf = _items(n=900, n_distinct=80).assign(group="a")
-    pdf2 = _items(n=600, n_distinct=50, seed=9).assign(group="b")
-    both = pd.concat([pdf, pdf2], ignore_index=True)
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, c in enumerate(np.array_split(both.sample(frac=1.0, random_state=2), 3)):
-        spark.createDataFrame(c.reset_index(drop=True)).coalesce(1).write.parquet(
-            str(src / f"f{i}.parquet")
-        )
-    stream = (
-        spark.readStream.schema("item string, group string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/*")
-    )
-    out_dir = tmp_path / "out"
-    q = (
-        streaming_cms(stream, "group", "item", d=d, w=w)
-        .writeStream.format("parquet")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(str(out_dir)).toPandas()
-    # the LAST estimate per (group, item) — n_seen orders micro-batches
-    last = (
-        got.sort_values("n_seen").groupby(["group", "item"]).last()["est"]
-    )
-    for gname, gpdf in (("a", pdf), ("b", pdf2)):
-        sk = cms_sketch(spark.createDataFrame(gpdf), "item", d=d, w=w)
-        want = (
-            cms_estimate(
-                sk,
-                spark.createDataFrame(gpdf[["item"]].drop_duplicates()),
-                "item",
-                d=d,
-                w=w,
-            )
-            .toPandas()
-            .set_index("item")["est"]
-        )
-        # estimates only grow; items whose last emission was the final
-        # micro-batch match the batch answer exactly, earlier ones are <=
-        for item, e in want.items():
-            assert last[(gname, item)] <= e
-        final_items = got[got["group"] == gname]
-        final_items = final_items[final_items["n_seen"] == final_items["n_seen"].max()]
-        assert len(final_items) > 0
-        for _, r in final_items.iterrows():
-            assert int(r["est"]) == int(want[r["item"]])
-
-
-def test_threshold_turns_monitor_into_alarm(spark):
-    d, w = 4, 256
-    pdf = pd.DataFrame({"item": ["hot"] * 50 + ["warm"] * 10 + ["cold"]})
-    fn = cms_state_fn(d=d, w=w, threshold=20)
-    state = FakeState()
-    out = list(fn(("g",), iter([_spark_side(spark, pdf, d, w)]), state))
-    got = out[-1]
-    assert list(got["item"]) == ["hot"]  # only the crosser is emitted
-    assert int(got["est"].iloc[0]) >= 50
-    # below-threshold batch emits nothing at all
-    out2 = list(fn(("g",), iter([_spark_side(spark, pd.DataFrame({"item": ["cold"]}), d, w)]), state))
-    assert out2 == []

@@ -96,7 +96,10 @@ def test_ngram_variant_no_broadcast_no_leaked_cache(spark):
     assert len(out.collect()) > 0
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" not in plan
-    assert set(jsc.getPersistentRDDs().keySet()) == before
+    # only new ids count: the JVM's GC may drop RDDs other tests left
+    # persisted from the weak-valued registry at any time
+    added = set(jsc.getPersistentRDDs().keySet()) - before
+    assert not added, added
 
 
 def test_ngram_variant_matches_padded_contains_on_corpus(spark):

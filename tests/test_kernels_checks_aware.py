@@ -92,7 +92,10 @@ def test_checked_hist_matches_native_per_checkset(spark, messy, checks):
     for name, native in _native_hists(messy, cfg).items():
         want = native.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
         assert _collect(base[name]) == _collect(want), name
-    assert set(jsc.getPersistentRDDs().keySet()) == before
+    # only new ids count: the JVM's GC may drop RDDs other tests left
+    # persisted from the weak-valued registry at any time
+    added = set(jsc.getPersistentRDDs().keySet()) - before
+    assert not added, added
 
 
 def _release(spark):
