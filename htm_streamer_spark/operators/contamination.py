@@ -2,38 +2,27 @@
 string (exact substring — the standard n-gram contamination check a
 training pipeline runs against eval-set probes before training).
 
-Two Spark-first strategies, tested equal:
+Two Spark-first strategies:
 
 - ``contaminated_pairs`` — broadcast the (small) probe table and
   nested-loop join on ``contains(text, probe)``. O(docs × probes)
   comparisons but one scan of the corpus and zero shuffle of document
   bytes; Catalyst picks BroadcastNestedLoopJoin. Right up to ~10^4
-  probes.
-- ``contaminated_pairs_regex`` — compile ALL probes into one
-  alternation and find every match per document in a single
-  ``regexp_extract_all`` pass, then hash-join matched text back to
-  probe_id against the broadcast probe table. One regex-automaton scan
-  per document regardless of probe count — the scale path when the
-  probe set is large (the regex engine is the poor man's Aho-Corasick;
-  a true multi-pattern automaton via mapInPandas would be the next
-  step but needs a library this container doesn't ship).
-
-Probes longer than a few words are near-unique, so match cardinality
-is tiny; the output pair set is never the bottleneck.
-
-A third strategy removes the one scale ceiling the first two share —
-both materialize the probe set on the driver (collect for the regex,
-broadcast for the nested-loop). ``contaminated_pairs_ngram`` is the
-word-n-gram membership check (the GPT-3/PaLM decontamination unit is
-an n-gram, 8-13 words) with NO driver collect and NO broadcast of
-either side: the doc side explodes every word n-gram position as a
-string (``_doc_grams``) and equi-joins it on the gram string against
-``(probe_id, gram)``, the probe side as the shuffle-hash build side.
-String equality IS the exact check, so the plan scans the corpus once
-and needs no hash pre-filter, no confirm pass and no cache. Probe
-cardinality is unbounded; the join is an ordinary distributed
-equi-join. (``operators/bloom.py`` is the low-traffic form: it drops
-non-member grams before the exchange.)
+  probes; probes longer than a few words are near-unique, so match
+  cardinality is tiny and the output pair set is never the bottleneck.
+- ``contaminated_pairs_ngram`` — the word-n-gram membership check (the
+  GPT-3/PaLM decontamination unit is an n-gram, 8-13 words) with NO
+  driver collect and NO broadcast of either side, so probe cardinality
+  is unbounded: the doc side explodes every word n-gram position as a
+  string (``_doc_grams``) and equi-joins it on the gram string against
+  ``(probe_id, gram)``, the probe side as the shuffle-hash build side.
+  String equality IS the exact check, so the plan scans the corpus once
+  and needs no hash pre-filter, no confirm pass and no cache. Words are
+  ``dedup.normalized_words``: the normalized text (its ``[a-z0-9 ]``
+  runs extracted and joined, see ``dedup.keep_chars``) split on ``' '``
+  with empty tokens removed — native expressions, no interpreted
+  lambda. (``operators/bloom.py`` is the low-traffic form: it drops
+  non-member grams before the exchange.)
 
 Reference analog: the referential/membership checks of the validation
 layer (/root/reference/htm_streamer/validation.py) applied to raw text.
@@ -41,12 +30,10 @@ layer (/root/reference/htm_streamer/validation.py) applied to raw text.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from htm_streamer_spark.operators.dedup import fan_out_narrow_scans, normalized_text
+from htm_streamer_spark.operators.dedup import fan_out_narrow_scans, normalized_words
 
 
 def derive_probes(
@@ -86,48 +73,6 @@ def contaminated_pairs(
     )
 
 
-def contaminated_pairs_regex(
-    docs: DataFrame, probes: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Same output as :func:`contaminated_pairs` via one alternation
-    regex per document (single automaton scan, probe-count-independent
-    per-row cost), then a broadcast hash join matched-text → probe_id.
-
-    The probe list is collected to the driver to build the pattern —
-    probes are a small dimension by construction (eval-set n-grams);
-    the corpus side is never collected.
-    """
-    probe_rows = probes.select("probe").distinct().collect()
-    pattern = "|".join(
-        re.escape(r["probe"]) for r in sorted(probe_rows, key=lambda r: r["probe"])
-    )
-    if not pattern:
-        return docs.sparkSession.createDataFrame([], "doc_id long, probe_id long")
-    # zero-width lookahead: plain alternation CONSUMES matched text, so a
-    # probe overlapping an earlier match is silently missed (e.g. probes
-    # "a b" scanning "a b a b a" — or two different probes overlapping).
-    # (?=(...)) matches at every position without consuming.
-    matched = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.regexp_extract_all(F.col(text_col), F.lit(f"(?=({pattern}))"), 1)
-            )
-        ).alias("probe"),
-    )
-    return (
-        matched.join(F.broadcast(probes), "probe")
-        .filter(F.col("doc_id") != F.col("probe_id"))
-        .select("doc_id", "probe_id")
-    )
-
-
-def _word_array(text_col: str):
-    return F.filter(
-        F.split(normalized_text(F.col(text_col)), r"\s+"), lambda w: w != ""
-    )
-
-
 def derive_ngram_probes(
     docs: DataFrame,
     text_col: str = "text",
@@ -139,7 +84,7 @@ def derive_ngram_probes(
     doc, the n words starting at 1-based word index ``start``. The
     DuckDB oracle rebuilds the identical table from the same parquet;
     real pipelines load eval-set n-grams instead."""
-    words = _word_array(text_col)
+    words = normalized_words(F.col(text_col))
     return (
         docs.filter(F.col("doc_id") % every == 0)
         .select(
@@ -160,16 +105,18 @@ def _doc_grams(docs: DataFrame, text_col: str, n: int) -> DataFrame:
     Plan hygiene:
     - fan out ``(doc_id, text)`` first, so a single-file layout does not
       tokenize on one core;
-    - the word array is built once, in its own projection;
+    - the word array (``normalized_words``: regexp run extract, join,
+      literal split, ``array_remove``) is built once, in its own
+      projection;
     - the size guard sits INSIDE the explode: a ``where(size >= n)``
-      would be pushed below the fan-out and re-run the
-      regexp/split/filter chain on the scan side, and without any guard
-      ``sequence(1, size-n+1)`` counts down for docs shorter than n;
+      would be pushed below the fan-out and re-run that tokenize chain
+      on the scan side, and without any guard ``sequence(1, size-n+1)``
+      counts down for docs shorter than n;
     - grams come from ``array_join(slice(...))`` per position, which
       stays in whole-stage codegen, unlike the interpreted ``zip_with``
       chain of ``_gram_array`` plus a per-row ``array_distinct``."""
     words = fan_out_narrow_scans(docs.select("doc_id", text_col)).select(
-        "doc_id", _word_array(text_col).alias("_t")
+        "doc_id", normalized_words(F.col(text_col)).alias("_t")
     )
     pos = F.when(F.size("_t") >= n, F.sequence(F.lit(1), F.size("_t") - (n - 1)))
     return words.select("doc_id", "_t", F.explode(pos).alias("_p")).select(

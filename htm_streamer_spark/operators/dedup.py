@@ -28,10 +28,35 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def keep_chars(col, char_class: str) -> F.Column:
+    """``col`` with every character outside ``[char_class]`` deleted.
+
+    Written as the concatenation of the maximal ``[char_class]+`` runs,
+    not as a ``regexp_replace`` of the negated class: joining the runs
+    yields by construction exactly the string the delete yields (NULL
+    stays NULL, empty stays empty), but java.util.regex consumes each
+    run in one greedy loop instead of attempting a match at every kept
+    character (~4x cheaper on the bench documents and on punctuated
+    prose). tests/test_text_normalization.py checks the two forms equal
+    on adversarial strings; tests/test_plan_lint.py rejects the negated
+    ``regexp_replace`` in any query plan."""
+    return F.array_join(F.regexp_extract_all(col, F.lit(f"[{char_class}]+"), 0), "")
+
+
 def normalized_text(col) -> F.Column:
-    """Lowercase, strip non-alphanumerics — the canonical form every
-    dedup tier hashes. Same expression is used in the DuckDB oracle."""
-    return F.regexp_replace(F.lower(col), r"[^a-z0-9 ]", "")
+    """Lowercase, keep only ``[a-z0-9 ]`` — the canonical form every
+    dedup tier hashes. The DuckDB oracles compute it as
+    ``regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g')``, the
+    reference :func:`keep_chars` equals."""
+    return keep_chars(F.lower(col), "a-z0-9 ")
+
+
+def normalized_words(col) -> F.Column:
+    """Non-empty words of :func:`normalized_text`. Normalized text holds
+    no whitespace but ``' '``, so a literal split plus ``array_remove``
+    equals the ``\\s+`` split filtered of empty tokens, without the
+    interpreted lambda."""
+    return F.array_remove(F.split(normalized_text(col), " "), "")
 
 
 def fan_out_narrow_scans(df: DataFrame) -> DataFrame:
@@ -497,9 +522,7 @@ def word_hash_array(text_col, method: str = "md5") -> F.Column:
     reproducible in the DuckDB oracle. ``method='xxhash64'``: masked
     xxhash64, ~5x cheaper, the production default at scale.
     """
-    words = F.filter(
-        F.split(normalized_text(text_col), r"\s+"), lambda w: F.length(w) > 0
-    )
+    words = normalized_words(text_col)
     if method == "md5":
         h = lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long")  # noqa: E731
     elif method == "xxhash64":

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from htm_streamer_spark.operators.dedup import keep_chars
+
 # tiny per-language stopword marker sets (n-gram heuristic langid):
 # chosen to be SQL-portable (plain LIKE/regexp counts)
 LANG_MARKERS: dict[str, list[str]] = {
@@ -78,6 +80,12 @@ def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def punctuation_count(t) -> F.Column:
+    """Number of ``.,;:!?`` characters: the length the text loses when
+    they are dropped."""
+    return F.length(t) - F.length(keep_chars(t, "^.,;:!?"))
+
+
 def quality_score(
     df: DataFrame, text_col: str = "text", keep_cols: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -88,7 +96,7 @@ def quality_score(
     need e.g. the source alongside the score stay single-scan)."""
     t = F.col(text_col)
     n_chars = F.length(t)
-    n_punct = F.length(F.regexp_replace(t, r"[^.,;:!?]", ""))
+    n_punct = punctuation_count(t)
     words = F.split(F.trim(F.lower(t)), r"\s+")
     n_words = F.size(words)
     stop = sum(
@@ -186,8 +194,9 @@ def readability(
 
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, fp): deterministic document fingerprint = md5 of the
-    normalized text (rolling-hash analog, portable to the oracle)."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9]", "")
+    lowercased text with everything but ``[a-z0-9]`` dropped (rolling-hash
+    analog, portable to the oracle)."""
+    norm = keep_chars(F.lower(F.col(text_col)), "a-z0-9")
     return df.select("doc_id", F.md5(norm).alias("fp"))
 
 
@@ -301,19 +310,14 @@ def pmi_collocations(
     cross-row float accumulation besides the exact integer totals, so
     any engine reproduces the scores bit-for-bit.
     """
-    from htm_streamer_spark.operators.dedup import _gram_array, normalized_text
+    from htm_streamer_spark.operators.dedup import _gram_array, normalized_words
 
     # word array materialized in its own projection: the tagged concat
     # references it ~6x (transform + the 4 refs inside _gram_array) and
     # would re-tokenize per reference inlined; explode_OUTER so
     # InferFiltersFromGenerate can't synthesize a size>0 predicate that
     # pushdown re-inlines into the scan (see dedup.shingles)
-    base = df.select(
-        F.filter(
-            F.split(normalized_text(F.col(text_col)), r"\s+"),
-            lambda x: F.length(x) > 0,
-        ).alias("_ws")
-    )
+    base = df.select(normalized_words(F.col(text_col)).alias("_ws"))
     ws = F.col("_ws")
     tagged = F.explode_outer(
         F.concat(

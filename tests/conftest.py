@@ -57,3 +57,35 @@ def tiny_pandas() -> pd.DataFrame:
 @pytest.fixture(scope="session")
 def cfg() -> EngineConfig:
     return EngineConfig()
+
+
+@pytest.fixture(scope="session")
+def tricky_texts() -> list:
+    """Adversarial inputs for the text normalizers: punctuation inside
+    and around words, non-space whitespace, blank and NULL rows, and
+    non-ASCII characters whose lowercase is (Kelvin sign, dotted capital
+    I) or is not (sharp s, ligature, CJK, emoji) ASCII."""
+    return [
+        "Hello, World!",
+        "don't stop-believing; rock'n'roll e-mail",
+        "a.b,c;d:e!f?g",
+        "tab\tseparated\twords",
+        "line\nbreak\r\nwindows\x0bvertical\x0cfeed",
+        "  leading and trailing  ",
+        "repeated    spaces   inside",
+        "",
+        None,
+        " ",
+        "\t\n ",
+        "!!! ... ???",
+        ".,;:!?",
+        "Digits 123 and UPPER CASE 4Ever 0x1F",
+        "\u212aelvin sign \u212a",
+        "\u0130stanbul \u0131\u0307",
+        "stra\u00dfe STRASSE",
+        "\ufb01le \ufb02ow",
+        "\u6f22\u5b57 \u304b\u306a mixed",
+        "emoji \U0001f642 inside \U0001f44d\U0001f3fd text",
+        "no\u00a0break em\u2003space ideographic\u3000space",
+        "x-y-z.1,2;3 a b c",
+    ]

@@ -1,5 +1,5 @@
-"""Decontamination scan: broadcast-contains join vs the single-scan
-regex-alternation variant, plus known-answer cases."""
+"""Decontamination scans: the broadcast-contains join and the word
+n-gram equi-join, known-answer cases and corpus parity."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from htm_streamer_spark.operators.contamination import (
     contaminated_pairs,
     contaminated_pairs_ngram,
-    contaminated_pairs_regex,
     derive_ngram_probes,
     derive_probes,
 )
@@ -38,26 +37,6 @@ def test_contamination_known_answer(spark):
         (r.doc_id, r.probe_id) for r in contaminated_pairs(docs, probes).collect()
     )
     assert got == [(0, 100), (1, 100), (3, 100)]
-
-
-def test_regex_variant_matches_join_variant(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    probes = derive_probes(docs, every=31, offset=10, length=12)
-    a = sorted(map(tuple, contaminated_pairs(docs, probes).collect()))
-    b = sorted(map(tuple, contaminated_pairs_regex(docs, probes).collect()))
-    assert a == b
-    assert len(a) > 0  # the probe shape must actually produce hits
-
-
-def test_regex_variant_escapes_metacharacters(spark):
-    docs = _docs(
-        spark,
-        [(0, "cost is $5.99 (sale) today"), (1, "cost is $5X99 [sale] today")],
-    )
-    probes = spark.createDataFrame([(7, "$5.99 (sale)")], "probe_id long, probe string")
-    got = sorted(map(tuple, contaminated_pairs_regex(docs, probes).collect()))
-    # '.' must not match 'X'; '(' must be literal
-    assert got == [(0, 7)]
 
 
 def test_ngram_variant_known_answer_word_boundaries(spark):

@@ -8,7 +8,10 @@ repo-wide invariants that must hold for any query we ship:
 - Arrow/Pandas stages only in the queries that declare a vectorized
   kernel (the ANN / multimodal / validation families);
 - source-scan count bounded (plan explosion guard: a query reading
-  the same table k times re-pays the scan k times at scale).
+  the same table k times re-pays the scan k times at scale);
+- no ``regexp_replace`` with a negated-class pattern (``[^...]``), ever
+  (java.util.regex attempts a match at every kept character; extract
+  the allowed runs and join them instead, see dedup.keep_chars).
 
 explain-only: no job runs, so the whole 70+-query sweep is cheap.
 """
@@ -17,6 +20,7 @@ from __future__ import annotations
 
 import importlib.util
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -98,8 +102,6 @@ def test_arrow_stages_only_where_declared(all_plans):
 
 
 def test_scan_count_bounded(all_plans):
-    import re
-
     bad = {
         n: len(re.findall(r"^\(\d+\) Scan parquet", p, re.M))
         for n, p in all_plans.items()
@@ -130,7 +132,6 @@ MAX_SAME_TABLE_SCANS = 3
 
 
 def test_same_table_scan_bounded(all_plans):
-    import re
     from collections import Counter
 
     bad = {}
@@ -145,4 +146,30 @@ def test_same_table_scan_bounded(all_plans):
     assert not bad, (
         f"same-table re-scan (> {MAX_SAME_TABLE_SCANS}x one source): {bad} — "
         "persist/localCheckpoint the shared subtree instead of re-deriving it"
+    )
+
+
+def _regexp_replace_patterns(plan: str) -> list[str]:
+    """The pattern argument of every ``regexp_replace(subject, pattern,
+    replacement, pos)`` printed in a plan: the text after the first
+    comma outside parentheses."""
+    out = []
+    for m in re.finditer(r"regexp_replace\(", plan):
+        depth, i = 0, m.end()
+        while i < len(plan) and not (depth == 0 and plan.startswith(", ", i)):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        out.append(plan[i + 2 : plan.find(", ", i + 2)])
+    return out
+
+
+def test_no_negated_class_regexp_replace(all_plans):
+    bad = {
+        n: sorted({pat for pat in _regexp_replace_patterns(p) if pat.startswith("[^")})
+        for n, p in all_plans.items()
+    }
+    bad = {n: pats for n, pats in bad.items() if pats}
+    assert not bad, (
+        f"negated-class regexp_replace in: {bad} — extract the allowed "
+        "runs with regexp_extract_all and array_join them instead"
     )

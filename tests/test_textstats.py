@@ -63,12 +63,19 @@ def test_quality_discriminates(crafted):
     assert got[1] > got[5]  # and beats empty
 
 
-def test_fingerprint_normalization(spark):
+def test_fingerprint_normalization(spark, tricky_texts):
     rows = [(1, "Hello, World!"), (2, "hello world"), (3, "HELLO-WORLD"), (4, "different")]
+    rows += [(10 + i, t) for i, t in enumerate(tricky_texts)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     fps = {r["doc_id"]: r["fp"] for r in fingerprint(df).collect()}
     assert fps[1] == fps[2] == fps[3]
     assert fps[4] != fps[1]
+    # the md5 of the negated-class delete the DuckDB oracle computes
+    ref = df.select(
+        "doc_id",
+        F.md5(F.regexp_replace(F.lower("text"), r"[^a-z0-9]", "")).alias("fp"),
+    )
+    assert fps == {r["doc_id"]: r["fp"] for r in ref.collect()}
 
 
 def test_on_real_documents(docs):
