@@ -3906,7 +3906,7 @@ FROM j
 
 
 def q_worst_segments_docs(spark, sf_dir):
-    """Segment drill-down (operators/profiling.py worst_segments):
+    """Segment drill-down (operators/profiling.py worst_segments_mean):
     short-document rate (n_chars < 100) per source vs the global rate,
     top-10 by absolute deviation — surfaces the per-segment failures a
     global quality gate masks (Simpson-style). The mean-decomposable

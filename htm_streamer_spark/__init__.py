@@ -12,8 +12,8 @@ idiomatic Spark DataFrame operators:
   spatial range check (model/htm_model.py:305-312)
 - doc_id uniqueness via salted two-phase hash aggregation — reference
   analog: duplicate-dataset NameError (driver.py:46-48)
-- referential check of `source` vs an allowed-values dimension table via
-  broadcast anti join — reference analog: labels lookup (driver.py:28-39)
+- referential check of `source` against the allowed-values list via a
+  codegen'd ``isin`` — reference analog: labels lookup (driver.py:28-39)
 - distribution-drift detection (token-frequency + n_tok histograms, KL/PSI
   vs a checkpointed baseline) — reference analog: the HTM anomaly
   likelihood (data/anomalylikelihood.py:424-467)

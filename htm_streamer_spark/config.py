@@ -10,8 +10,7 @@ once, driver-side, before any data is touched.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Any
+from dataclasses import dataclass
 
 from pyspark.sql import types as T
 
@@ -27,13 +26,6 @@ SEQUENCES_SCHEMA = T.StructType(
         T.StructField("source", T.StringType(), True),
         T.StructField("ts", T.TimestampType(), True),
         T.StructField("part_id", T.IntegerType(), True),
-    ]
-)
-
-DIM_SOURCES_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType(), False),
-        T.StructField("active", T.BooleanType(), False),
     ]
 )
 
@@ -93,14 +85,6 @@ class EngineConfig:
     # baseline before the engine leaves "sampling" mode.
     baseline_partitions: int = 4
 
-    # likelihood-parity params (reference defaults,
-    # anomalylikelihood.py:231 + config--model_default.yaml:8-10)
-    historic_window_size: int = 8640
-    reestimation_period: int = 100
-    averaging_window: int = 10
-
-    extra: dict[str, Any] = field(default_factory=dict)
-
 
 _TYPE_SPECS: dict[str, type | tuple[type, ...]] = {
     "vocab_size": int,
@@ -112,9 +96,6 @@ _TYPE_SPECS: dict[str, type | tuple[type, ...]] = {
     "n_salts": int,
     "checks": tuple,
     "baseline_partitions": int,
-    "historic_window_size": int,
-    "reestimation_period": int,
-    "averaging_window": int,
 }
 
 _KNOWN_CHECKS = {
@@ -149,21 +130,6 @@ def config_from_yaml(path: str) -> EngineConfig:
         if key in raw and isinstance(raw[key], list):
             raw[key] = tuple(raw[key])
     return validate_config(EngineConfig(**raw))
-
-
-def config_to_yaml(cfg: EngineConfig, path: str) -> None:
-    """Persist an EngineConfig as YAML (reference analog: save_config,
-    utils/fs.py:195-213 — minus the per-timestep run state, which lives
-    in the checkpoint catalog instead)."""
-    import dataclasses
-
-    import yaml
-
-    d = dataclasses.asdict(cfg)
-    d["allowed_sources"] = list(d["allowed_sources"])
-    d["checks"] = list(d["checks"])
-    with open(path, "w") as f:
-        yaml.safe_dump(d, f, sort_keys=True)
 
 
 def validate_config(cfg: EngineConfig) -> EngineConfig:
@@ -205,13 +171,6 @@ def validate_config(cfg: EngineConfig) -> EngineConfig:
         raise ValueError("allowed_sources must be non-empty")
     if len(set(cfg.allowed_sources)) != len(cfg.allowed_sources):
         raise ValueError("allowed_sources contains duplicates")
-    # reference analog of learning > sampling (validation.py:169-177):
-    # re-estimation cadence must fit inside the historic window
-    if cfg.reestimation_period > cfg.historic_window_size:
-        raise ValueError(
-            "reestimation_period must be <= historic_window_size "
-            f"({cfg.reestimation_period} > {cfg.historic_window_size})"
-        )
     return cfg
 
 

@@ -1,5 +1,4 @@
 from htm_streamer_spark.fixtures.generator import (
-    generate_dim_sources,
     generate_sequences,
     generate_series,
     write_sequences_parquet,
@@ -11,7 +10,6 @@ from htm_streamer_spark.fixtures.oracle import (
 
 __all__ = [
     "generate_sequences",
-    "generate_dim_sources",
     "generate_series",
     "write_sequences_parquet",
     "oracle_violations",

@@ -285,17 +285,6 @@ def write_sequences_parquet(
     return out
 
 
-def generate_dim_sources() -> pa.Table:
-    """Allowed-values dimension table (broadcast side of the referential
-    check; reference analog: NAB labels source, driver.py:28-39)."""
-    return pa.table(
-        {
-            "source": pa.array(list(SOURCES), type=pa.string()),
-            "active": pa.array([True] * len(SOURCES), type=pa.bool_()),
-        }
-    )
-
-
 def generate_series(
     n_series: int = 3, rows_per_series: int = 2000, seed: int = 42
 ) -> dict[str, np.ndarray]:

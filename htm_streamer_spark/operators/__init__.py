@@ -3,7 +3,6 @@ from htm_streamer_spark.operators.invariants import (
     row_check_flags,
     row_violations,
 )
-from htm_streamer_spark.operators.referential import referential_violations
 from htm_streamer_spark.operators.stats import partition_stats
 from htm_streamer_spark.operators.uniqueness import duplicate_ids, duplicate_violations
 from htm_streamer_spark.operators.drift import (
@@ -18,7 +17,6 @@ __all__ = [
     "partition_stats",
     "duplicate_ids",
     "duplicate_violations",
-    "referential_violations",
     "ntok_histogram",
     "drift_scores",
 ]

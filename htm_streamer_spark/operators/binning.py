@@ -2,21 +2,14 @@
 n-ile) within its stratum — the curriculum-bucketing / quality-tiering
 op of a training pipeline ("train on the top quartile first").
 
-Two tiers:
-
 - ``quantile_bins_exact``: percent_rank window per stratum with a
   unique tie-break → bin = floor(rank·n). Exact and deterministic, so
   it has a DuckDB oracle; cost = one shuffle + one sort per stratum,
   and a mega-stratum serializes in one window task (the same accepted
   per-key bound as the likelihood/as-of windows — fine for strata like
   language, wrong for a single global stratum at 10^12 rows).
-- ``quantile_bins_approx``: the scale path. ONE grouped
-  ``percentile_approx`` aggregation computes every stratum's
-  thresholds in a single pass (sketches partial-merge map-side; the
-  shuffle carries strata×sketch rows), then binning is a broadcast
-  join + comparison — no sort, no per-stratum job, any stratum size.
-  Bins agree with exact except around thresholds within the sketch's
-  accuracy (pinned in tests).
+- ``quantile_synopsis``: per-group quantiles of a deterministic hash
+  sample with a distribution-free (DKW) error bound.
 """
 
 from __future__ import annotations
@@ -43,33 +36,6 @@ def quantile_bins_exact(
     )
 
 
-def quantile_bins_approx(
-    df: DataFrame,
-    col: str,
-    n_bins: int = 4,
-    strata_col: str = "lang",
-    rel_err: float = 0.01,
-) -> DataFrame:
-    """Scale path: one grouped ``percentile_approx`` aggregation yields
-    every stratum's (n_bins-1) thresholds; rows bin by counting the
-    thresholds at-or-below their value (ties at a threshold go to the
-    HIGHER bin — within the sketch's accuracy band this differs from
-    exact by design). The thresholds frame is strata-sized → broadcast
-    join; the whole op is one agg pass + one projection pass."""
-    probs = [i / n_bins for i in range(1, n_bins)]
-    accuracy = max(100, int(1.0 / rel_err))
-    cuts = df.groupBy(strata_col).agg(
-        F.percentile_approx(col, probs, accuracy).alias("_cuts")
-    )
-    joined = df.join(F.broadcast(cuts), strata_col)
-    bin_col = F.aggregate(
-        "_cuts",
-        F.lit(0),
-        lambda acc, t: acc + F.when(F.col(col) >= t, 1).otherwise(0),
-    )
-    return joined.withColumn("bin", bin_col.cast("int")).drop("_cuts")
-
-
 def quantile_synopsis(
     df: DataFrame,
     col: str,
@@ -84,10 +50,10 @@ def quantile_synopsis(
     error bound — the quantile member of the sketch tier (KMV =
     distinct, Bloom = membership, CMS = frequency).
 
-    ``quantile_bins_approx``'s percentile_approx sketch is the built-in
-    scale path, but its state is engine-opaque (not recomputable by an
-    external oracle) and its error bound is a relative-rank accuracy
-    knob. This operator instead takes a uniform-BY-HASH row sample —
+    Spark's built-in ``percentile_approx`` sketch scales too, but its
+    state is engine-opaque (not recomputable by an external oracle) and
+    its error bound is a relative-rank accuracy knob. This operator
+    instead takes a uniform-BY-HASH row sample —
     keep the row iff ``pmod(md5_60bit(id), rate_den) < rate_num`` — and
     reads EXACT quantiles of the sample. Everything is deterministic
     (same rows sampled on any engine, any partitioning), so a DuckDB

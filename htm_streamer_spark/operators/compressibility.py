@@ -115,31 +115,3 @@ def compression_stats(
         deflate_kernel(text_col, level, passthrough), schema=schema
     )
     return sizes.select(*passthrough, "n_bytes", "n_deflate", _ratio_col().alias("ratio"))
-
-
-def compression_profile(
-    df: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    level: int = DEFAULT_LEVEL,
-    lo: float = 0.30,
-    hi: float = 0.80,
-) -> DataFrame:
-    """Per-group compression-band profile: (group, n_docs, mean_ratio,
-    min_ratio, max_ratio, n_below, n_above) — the monitoring readout (a
-    source whose mean ratio drifts down is minting templated text; one
-    drifting up is leaking binary). One Arrow pass + one combinable
-    group aggregate; empty/NULL-text docs count in n_docs but not in
-    the ratio moments (NULL ratio excluded by the aggregates)."""
-    per_doc = compression_stats(
-        df, text_col=text_col, level=level, keep_cols=(group_col,)
-    )
-    r = F.col("ratio")
-    return per_doc.groupBy(group_col).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg(r).alias("mean_ratio"),
-        F.min(r).alias("min_ratio"),
-        F.max(r).alias("max_ratio"),
-        F.count(F.when(r < lo, 1)).alias("n_below"),
-        F.count(F.when(r > hi, 1)).alias("n_above"),
-    )

@@ -13,9 +13,8 @@ shuffle, whole-stage codegen). Reference analogs per check:
 - ``token_range`` — the spatial (range) anomaly check: value outside
   [minExpected, maxExpected) (model/htm_model.py:305-312).
 - ``empty_tokens`` — flat-metric guard (anomalylikelihood.py:530-538).
-- ``bad_source`` — membership against the allowed-values set; small-list
-  ``isin`` form here, the broadcast-join form lives in referential.py
-  (driver.py:28-39).
+- ``bad_source`` — membership against the allowed-values set, a
+  small-list ``isin`` (driver.py:28-39).
 """
 
 from __future__ import annotations

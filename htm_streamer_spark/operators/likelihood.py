@@ -77,19 +77,6 @@ def log_likelihood_expr(likelihood: Column) -> Column:
     return F.log(F.lit(LOG_EPS) - likelihood) / F.lit(LOG_DENOM)
 
 
-def moving_average_col(
-    score: Column, series_col: str, order_col: str, window: int = 10
-) -> Column:
-    """Trailing mean over the last ``window`` rows including current
-    (A3: MovingAverage, anomalylikelihood.py:109-190)."""
-    w = (
-        Window.partitionBy(series_col)
-        .orderBy(order_col)
-        .rowsBetween(-(window - 1), 0)
-    )
-    return F.avg(score).over(w)
-
-
 # ---------------------------------------------------------------------------
 # tier 1: native windowed operator
 # ---------------------------------------------------------------------------

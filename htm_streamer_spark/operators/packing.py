@@ -3,31 +3,12 @@ context windows — the step between a deduped/filtered corpus and an
 LLM training shard (every large-scale pipeline packs; padding waste is
 paid in GPU-hours).
 
-Two tiers, matching how pipelines actually pack:
-
-- ``pack_contiguous``: the GPT-style contiguous token stream. Docs are
-  laid end-to-end in a deterministic order and the window id is just
-  ``floor(exclusive_cumsum(n_tok) / capacity)`` — docs may straddle a
-  boundary (the training loader splits them). One window function over
-  one shuffle; exact SQL twin for the DuckDB oracle.
-
-- ``pack_first_fit``: greedy sequential first-fit — a doc opens a new
-  bin when it would overflow the current one; no doc straddles. This
-  is inherently a sequential scan (bin state depends on every prior
-  doc), so it runs per ``shard`` via ``applyInPandas`` — shards pack
-  independently and in parallel, the standard trick (packing quality
-  is unaffected: waste is O(1) per bin regardless of shard count).
-  Inside a shard the loop is numpy-free-Python over the shard's doc
-  LENGTHS only (one int per doc, not per token) — a 10^6-doc shard is
-  a 10^6-step int loop, microseconds per batch; the token arrays never
-  enter Python.
-
-Scale notes: both tiers shuffle once on the shard/order key. The
-deterministic order is (shard, sort_key) — content-hash by default so
-packing is reproducible under any input partitioning. At 10^12 docs,
-shard count is chosen so a shard's doc-count fits an Arrow group
-(~10^6), i.e. shards ≈ corpus/10^6 — far above any executor count, so
-parallelism is never shard-limited.
+``pack_contiguous`` is the GPT-style contiguous token stream. Docs are
+laid end-to-end in a deterministic order and the window id is just
+``floor(exclusive_cumsum(n_tok) / capacity)`` — docs may straddle a
+boundary (the training loader splits them). One window function over
+one shuffle; exact SQL twin for the DuckDB oracle. With ``shard_col``
+the stream restarts per shard, so shards pack in parallel.
 
 Reference analog: none (the reference never batches by token budget);
 this is a training-data capability the Spark engine adds, like dedup
@@ -36,7 +17,6 @@ and ANN.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -68,72 +48,4 @@ def pack_contiguous(
         shard.alias("shard"),
         F.floor((incl - F.col(len_col)) / capacity).alias("pack_id"),
         offset,
-    )
-
-
-def pack_first_fit(
-    df: DataFrame,
-    capacity: int,
-    len_col: str = "n_tok",
-    id_col: str = "doc_id",
-    n_shards: int = 64,
-) -> DataFrame:
-    """(id, shard, pack_id, pack_fill): greedy sequential first-fit per
-    shard. Docs longer than ``capacity`` get a bin alone (pack_fill >
-    capacity flags them for the loader to truncate/split). Shard =
-    content hash of the id; order within a shard = (id) — both
-    deterministic, so the packing is reproducible under any input
-    partitioning. ``pack_fill`` is the bin's running fill AFTER placing
-    the doc (the last doc of a bin carries the bin's final fill)."""
-    spark_shard = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).alias("shard")
-    narrow = df.select(F.col(id_col), F.col(len_col).cast("long").alias("_len"), spark_shard)
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"{id_col} {id_type}, shard int, pack_id long, pack_fill long"
-    )
-
-    def pack_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        pack_ids, fills = [], []
-        bin_id, fill = 0, 0
-        first = True
-        for ln in pdf["_len"]:
-            ln = int(ln)
-            if not first and fill + ln > capacity:
-                bin_id += 1
-                fill = 0
-            first = False
-            fill += ln
-            pack_ids.append(bin_id)
-            fills.append(fill)
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col],
-                "shard": pdf["shard"].astype("int32"),
-                "pack_id": pack_ids,
-                "pack_fill": fills,
-            }
-        )
-
-    return narrow.groupBy("shard").applyInPandas(pack_shard, schema=out_schema)
-
-
-def packing_efficiency(packed: DataFrame, capacity: int) -> DataFrame:
-    """One-row summary: (n_docs, n_bins, total_tokens, waste_frac) —
-    the number a pipeline actually tunes packing by. ``packed`` is the
-    output of pack_first_fit; a bin's final fill is the MAX pack_fill
-    within (shard, pack_id)."""
-    bins = packed.groupBy("shard", "pack_id").agg(
-        F.max("pack_fill").alias("fill"), F.count(F.lit(1)).alias("n_docs")
-    )
-    return bins.agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.count(F.lit(1)).alias("n_bins"),
-        F.sum("fill").alias("total_tokens"),
-        (
-            1.0
-            - F.sum(F.least(F.col("fill"), F.lit(capacity)))
-            / (F.count(F.lit(1)) * capacity)
-        ).alias("waste_frac"),
     )

@@ -8,7 +8,7 @@ validator runs before trusting a join or a global metric.
   between a result and an OOM. The reference validates single-table
   invariants only (htm_streamer/utils/validation.py); cross-table
   shape is the missing pre-join gate.
-- ``worst_segments``: per-segment metric vs the global metric, ranked
+- ``worst_segments_mean``: per-segment mean vs the global mean, ranked
   by absolute deviation — the drill-down that finds "null rate is fine
   globally but 40% in one source" failures that global gates
   structurally cannot see (Simpson-style masking).
@@ -16,8 +16,8 @@ validator runs before trusting a join or a global metric.
 Scale notes: ``join_profile`` aggregates each side to per-key counts
 first (map-side combinable), then joins the two *key-counts* frames —
 the shuffle carries one row per distinct key, never the fact rows.
-``worst_segments`` is one aggregation plus a broadcast of the 1-row
-global frame. No collect, no UDFs.
+``worst_segments_mean`` is one aggregation plus a broadcast of the
+1-row global frame. No collect, no UDFs.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["join_profile", "time_gaps", "worst_segments", "worst_segments_mean"]
+__all__ = ["join_profile", "time_gaps", "worst_segments_mean"]
 
 
 def join_profile(
@@ -87,25 +87,6 @@ def join_profile(
     )
 
 
-def worst_segments(
-    df: DataFrame,
-    segment_col: str,
-    metric: Column,
-    metric_name: str = "metric",
-    top_k: int = 10,
-) -> DataFrame:
-    """Per-segment value of an aggregate ``metric`` (any aggregate
-    Column, e.g. ``F.avg(F.col('x').isNull().cast('double'))``) next
-    to the global value, ranked by absolute deviation, top-k. Exposes
-    segments a global gate masks. Output columns: segment (as named),
-    <metric_name>, global_<metric_name>, abs_dev, n_rows."""
-    per = df.groupBy(segment_col).agg(
-        metric.alias(metric_name), F.count(F.lit(1)).alias("n_rows")
-    )
-    glob = df.agg(metric.alias(f"global_{metric_name}"))
-    return _rank_segments(per, glob, segment_col, metric_name, top_k)
-
-
 def worst_segments_mean(
     df: DataFrame,
     segment_col: str,
@@ -114,12 +95,15 @@ def worst_segments_mean(
     top_k: int = 10,
     decimals: int = 6,
 ) -> DataFrame:
-    """`worst_segments` specialized to MEAN metrics (rates, averages —
-    the common case): because a mean decomposes as Σv/Σn, the global
-    value derives from the per-segment sums, so the fact table is
-    scanned ONCE (the generic version necessarily scans twice; at
-    100 TB that second scan is the whole cost). ``value`` is a per-row
-    expression (e.g. ``(col('x') < 100).cast('double')``)."""
+    """Per-segment mean of ``value`` next to the global mean, ranked by
+    absolute deviation (segment name breaks ties), top-k. Exposes
+    segments a global gate masks. Because a mean decomposes as Σv/Σn,
+    the global value derives from the per-segment sums, so the fact
+    table is scanned ONCE (a generic aggregate would need a second
+    scan for the global value; at 100 TB that scan is the whole cost).
+    ``value`` is a per-row expression (e.g.
+    ``(col('x') < 100).cast('double')``). Output columns: segment (as
+    named), <metric_name>, global_<metric_name>, abs_dev, n_rows."""
     per = df.groupBy(segment_col).agg(
         F.sum(value.cast("double")).alias("_sum"),
         F.count(F.lit(1)).alias("n_rows"),
@@ -136,17 +120,7 @@ def worst_segments_mean(
         ),
         "n_rows",
     )
-    return _rank_segments(seg_metric, glob, segment_col, metric_name, top_k)
-
-
-def _rank_segments(
-    per: DataFrame,
-    glob: DataFrame,
-    segment_col: str,
-    metric_name: str,
-    top_k: int,
-) -> DataFrame:
-    scored = per.crossJoin(F.broadcast(glob)).select(
+    scored = seg_metric.crossJoin(F.broadcast(glob)).select(
         segment_col,
         metric_name,
         f"global_{metric_name}",

@@ -103,39 +103,3 @@ def winsorize(
         bounds = df.groupBy(group_col).agg(*bounds_agg)
         joined = df.join(F.broadcast(bounds), group_col)
     return joined.withColumn(out_col, clip).drop("_q_lo", "_q_hi")
-
-
-def hll_partition_sketches(
-    df: DataFrame,
-    col: str,
-    part_col: str = "part_id",
-    lg_config_k: int = 12,
-) -> DataFrame:
-    """One Apache DataSketches HLL sketch per partition over ``col`` —
-    the MERGEABLE form of the distinct-count check. Where
-    ``approx_count_distinct`` yields a number that cannot be combined
-    later, these sketch blobs union losslessly, so an incremental run
-    sketches ONLY new partitions and still answers the whole-table
-    question: the checkpoint-table pattern (sources/table_io.py) applied
-    to distinct-count state, and the 100-TB answer to "distinct doc_ids
-    across 10^12 rows without ever rescanning validated data".
-
-    Returns (part_col, hll binary). Partial-merge capable (the sketch
-    union IS the combiner), shuffle carries one blob per partition.
-    """
-    return df.groupBy(part_col).agg(
-        F.hll_sketch_agg(F.col(col), F.lit(lg_config_k)).alias("hll")
-    )
-
-
-def hll_merged_estimate(sketches: DataFrame) -> DataFrame:
-    """Union per-partition HLL sketches into a single whole-table
-    distinct estimate: one row (n_parts, estimate). The estimate is
-    DETERMINISTIC given the data and lg_config_k — the union of
-    per-partition sketches equals the sketch of the whole table, which
-    tests/test_hll_sketches.py pins exactly (merged == direct) plus an
-    error bound vs the exact count."""
-    return sketches.agg(
-        F.count(F.lit(1)).cast("long").alias("n_parts"),
-        F.hll_sketch_estimate(F.hll_union_agg(F.col("hll"))).alias("estimate"),
-    )

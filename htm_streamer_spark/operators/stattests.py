@@ -912,19 +912,7 @@ def mann_kendall(
     (group, n_buckets, s, z, trend).
     """
     g = group_col
-    b = F.date_trunc(bucket, F.col(ts_col))
-    counts = df.groupBy(F.col(g), b.alias("_b")).agg(
-        F.count(F.lit(1)).alias("_c")
-    )
-    counts = counts.persist()  # span + dense join: one fact scan
-    span = counts.groupBy(g).agg(
-        F.min("_b").alias("_lo"), F.max("_b").alias("_hi")
-    )
-    step = F.expr(f"interval 1 {bucket}")
-    grid = span.select(
-        g, F.explode(F.sequence("_lo", "_hi", step)).alias("_b")
-    )
-    dense = grid.join(counts, [g, "_b"], "left").fillna({"_c": 0})
+    dense = _dense_counts(df, g, ts_col, bucket)
     dense = dense.persist()  # pairs + ties + n derive from it
     a = dense.select(g, F.col("_b").alias("_bi"), F.col("_c").alias("_ci"))
     c2 = dense.select(g, F.col("_b").alias("_bj"), F.col("_c").alias("_cj"))
@@ -1063,20 +1051,7 @@ def permutation_entropy(
     Returns (group, n_triples, perm_entropy, normalized), 6 dp.
     """
     g = group_col
-    b = F.date_trunc(bucket, F.col(ts_col))
-    counts = (
-        df.groupBy(F.col(g), b.alias("_b"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .persist()
-    )
-    span = counts.groupBy(g).agg(
-        F.min("_b").alias("_lo"), F.max("_b").alias("_hi")
-    )
-    step = F.expr(f"interval 1 {bucket}")
-    grid = span.select(
-        g, F.explode(F.sequence("_lo", "_hi", step)).alias("_b")
-    )
-    dense = grid.join(counts, [g, "_b"], "left").fillna({"_c": 0})
+    dense = _dense_counts(df, g, ts_col, bucket)
     wo = Window.partitionBy(g).orderBy("_b")
     trip = dense.select(
         g,
@@ -1400,19 +1375,7 @@ def hurst_rescaled_range(
     (group, n_scales, hurst), 6 dp.
     """
     g = group_col
-    b = F.date_trunc(bucket, F.col(ts_col))
-    counts = df.groupBy(F.col(g), b.alias("_b")).agg(
-        F.count(F.lit(1)).alias("_c")
-    )
-    counts = counts.persist()
-    span = counts.groupBy(g).agg(
-        F.min("_b").alias("_lo"), F.max("_b").alias("_hi")
-    )
-    step = F.expr(f"interval 1 {bucket}")
-    grid = span.select(
-        g, F.explode(F.sequence("_lo", "_hi", step)).alias("_b")
-    )
-    dense = grid.join(counts, [g, "_b"], "left").fillna({"_c": 0})
+    dense = _dense_counts(df, g, ts_col, bucket)
     w_idx = Window.partitionBy(g).orderBy("_b")
     base = dense.select(
         g,

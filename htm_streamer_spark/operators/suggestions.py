@@ -25,8 +25,6 @@ The spec itself is driver-side metadata (a list of dicts, JSON-able).
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -130,11 +128,3 @@ def check_constraints(df: DataFrame, spec: list[dict]) -> DataFrame:
         "constraint_id string, column string, kind string, "
         "n_violations long, passed boolean",
     )
-
-
-def spec_to_json(spec: list[dict]) -> str:
-    return json.dumps(spec, sort_keys=True)
-
-
-def spec_from_json(s: str) -> list[dict]:
-    return json.loads(s)

@@ -9,7 +9,7 @@ config.py:199-225 and pipeline/htm_stream.py:76-147):
    reads (≙ the reference accumulating ``features_samples`` then
    deriving encoder ranges, config/config.py:178-196,64-79).
 2. *running*: per-partition stats + invariant counts (one fused agg),
-   violation rows (one explode pass + salted uniqueness + broadcast
+   violation rows (one explode pass + salted uniqueness + ``isin``
    referential), drift scores vs baseline, verdict assembly with the
    hard-fail override (model/htm_model.py:385-392) and probation
    (anomalylikelihood.py:440-442).
@@ -95,9 +95,8 @@ def compute_baseline(
 
 
 def all_violations(df: DataFrame, narrow: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Union of row-level + uniqueness violation rows (referential is a
-    row-level ``isin`` check by default; see operators/referential.py
-    for the dimension-table broadcast form). ``narrow`` is ``df``'s
+    """Union of row-level + uniqueness violation rows (referential is the
+    row-level ``isin`` check ``bad_source``). ``narrow`` is ``df``'s
     per-row feature frame (``featurize`` or the fused kernel's); every
     check reads it except the opt-in content check, which hashes the
     token arrays of ``df``."""

@@ -1,9 +1,3 @@
-from htm_streamer_spark.sources.bucketed import (
-    bucketed_duplicate_ids,
-    colocated_join,
-    count_exchanges,
-    write_bucketed,
-)
 from htm_streamer_spark.sources.record_io import jsonl_schema, read_records
 from htm_streamer_spark.sources.table_io import (
     IcebergCatalog,
@@ -15,12 +9,8 @@ from htm_streamer_spark.sources.table_io import (
 __all__ = [
     "IcebergCatalog",
     "ManifestCatalog",
-    "bucketed_duplicate_ids",
-    "colocated_join",
-    "count_exchanges",
     "iceberg_available",
     "jsonl_schema",
     "list_hive_partitions",
     "read_records",
-    "write_bucketed",
 ]

@@ -122,8 +122,8 @@ class ManifestCatalog:
         stats_cols: tuple[str, ...] | None = None,
     ) -> None:
         """Stage a Spark DataFrame as parquet files (not yet visible).
-        ``bucket`` tags the staged files with a key-hash bucket id so a
-        later merge can rewrite only affected buckets (Iceberg-style
+        ``bucket`` tags the staged files with a key-hash bucket id;
+        :meth:`compact` then rewrites each bucket on its own (Iceberg-style
         copy-on-write granularity). ``stats_cols`` records file-level
         min/max for those columns in the manifest entry (read from the
         parquet footers — metadata only, no data scan), enabling
@@ -144,8 +144,9 @@ class ManifestCatalog:
     def restage(self, table: str, entries: list[dict]) -> None:
         """Carry existing committed files forward into the next version
         WITHOUT copying data — the manifest gains new entries pointing
-        at the same parquet files. This is what lets a merge commit be
-        a complete snapshot while rewriting only the touched buckets."""
+        at the same parquet files. This is what lets a compaction commit
+        be a complete snapshot while rewriting only the buckets that need
+        it."""
         for e in entries:
             path = self.root / e["file"]
             if not path.exists():
@@ -311,8 +312,8 @@ class ManifestCatalog:
         """Expire history: drop manifest entries of versions older than
         the last ``keep_last`` commits and delete data files no longer
         referenced by any surviving version (Iceberg ``expire_snapshots``
-        analog — the step that actually reclaims space after merge /
-        compact rewrites). Time travel below the horizon stops working,
+        analog — the step that actually reclaims space after compact
+        rewrites). Time travel below the horizon stops working,
         by design. Returns the deleted file paths."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1 (the live snapshot)")
@@ -524,176 +525,3 @@ class IcebergCatalog:
         for t in self.ENGINE_TABLES:
             self.spark.sql(f"DROP TABLE IF EXISTS {self._fqn(t)}")
         self._staged = []
-
-
-def merge_upsert(
-    spark: SparkSession,
-    cat: ManifestCatalog,
-    table: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    order_col: str,
-    n_buckets: int = 16,
-    extra_props: dict | None = None,
-) -> int:
-    """MERGE INTO analog: copy-on-write upsert with bucket-level file
-    pruning — the scalable shape of SCD-1 table maintenance.
-
-    Rows are hash-bucketed on ``key_cols`` (xxhash64 mod n_buckets).
-    Only buckets that appear in ``updates`` are read, merged
-    (latest-wins on ``order_col``; an update beats an existing row on
-    an exact tie), and rewritten; every untouched bucket's files are
-    carried into the new snapshot by manifest reference — zero data
-    copy. At warehouse scale this is the difference between rewriting
-    100 TB per merge and rewriting only the few buckets the day's
-    updates touch (reference analog: the model-state pickle replace,
-    utils/fs.py:92-130 — which rewrites the WHOLE state every step).
-
-    Readers use ``cat.read(spark, table, latest_only=True)``: each
-    merge commit is a complete snapshot of the table.
-
-    Determinism contract: distinct keys must carry distinct
-    ``order_col`` values WITHIN one updates batch — two update rows for
-    the same key at the same order value tie, and the survivor among
-    them is arbitrary (same rule as Iceberg MERGE, which rejects
-    multiple matches outright).
-
-    Returns the committed version.
-    """
-    from pyspark.sql import functions as F
-
-    if not key_cols:
-        raise ValueError("key_cols must be non-empty")
-    prop_key = f"merge.{table}.n_buckets"
-    pinned = cat.prop(prop_key)
-    if pinned is not None and int(pinned) != n_buckets:
-        raise ValueError(
-            f"{table} was merged with n_buckets={pinned}; bucket tags are "
-            f"only valid under that layout (got {n_buckets})"
-        )
-    bucket_of = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
-    data_cols = updates.columns
-    upd = updates.withColumn("__bucket", bucket_of).withColumn(
-        "__is_update", F.lit(1)
-    )
-    touched = {
-        r["__bucket"] for r in upd.select("__bucket").distinct().collect()
-    }  # metadata-scale: at most n_buckets values
-    current = cat.entries(table, latest_only=True)
-    # files staged without a bucket tag (initial plain loads) may hold
-    # keys of ANY bucket — they must always join the rewrite set
-    rewrite = [
-        e for e in current if e.get("bucket") is None or e["bucket"] in touched
-    ]
-    untouched = [e for e in current if e not in rewrite]
-    if rewrite:
-        cur = (
-            spark.read.parquet(*[str(cat.root / e["file"]) for e in rewrite])
-            .select(*data_cols)
-            .withColumn("__bucket", bucket_of)
-            .withColumn("__is_update", F.lit(0))
-        )
-        merged_src = cur.unionByName(upd)
-    else:
-        merged_src = upd
-    # latest-wins per key: max_by over (order_col, is_update) — an
-    # update at the same order value replaces the existing row
-    row = F.struct(*[F.col(c) for c in data_cols])
-    ordk = F.struct(F.col(order_col), F.col("__is_update"))
-    merged = (
-        merged_src.groupBy(*[F.col(k) for k in key_cols], F.col("__bucket"))
-        .agg(F.max_by(row, ordk).alias("__row"))
-        .select("__bucket", *[F.col(f"__row.{c}").alias(c) for c in data_cols])
-        .persist()
-    )
-    # stage every bucket PRESENT in the rewrite set (covers untagged
-    # files whose rows fall outside the update's buckets)
-    out_buckets = sorted(r["__bucket"] for r in merged.select("__bucket").distinct().collect())
-    try:
-        for b in out_buckets:
-            part = merged.where(F.col("__bucket") == b).drop("__bucket")
-            cat.stage_spark(table, part, bucket=b)
-        cat.restage(table, untouched)
-    except Exception:
-        cat.abort()
-        raise
-    finally:
-        merged.unpersist()
-    return cat.commit(props={prop_key: n_buckets, **(extra_props or {})})
-
-
-def delete_rows(
-    spark: SparkSession,
-    cat: ManifestCatalog,
-    table: str,
-    deletes: DataFrame,
-    key_cols: list[str],
-    n_buckets: int = 16,
-    extra_props: dict | None = None,
-) -> int:
-    """DELETE FROM analog: copy-on-write removal of every row whose
-    key appears in ``deletes`` — the right-to-be-forgotten primitive a
-    training-data catalog needs.
-
-    Same bucket discipline as ``merge_upsert`` (and the same pinned
-    ``merge.{table}.n_buckets`` layout property, so deletes and merges
-    agree on the layout): only buckets containing a deleted key are
-    read and rewritten via a broadcast LEFT ANTI join; every untouched
-    bucket is carried into the new snapshot by manifest reference with
-    zero data copy. The delete-key set is metadata-scale by nature
-    (an erasure request list), hence the broadcast.
-
-    IMPORTANT scope note: a delete commit creates a NEW snapshot —
-    prior snapshots still reference the old files (time travel reads
-    still see the rows). Actual physical erasure = delete_rows +
-    ``cat.expire_versions()``, which removes the superseded files from
-    disk; the combined flow is pinned by test.
-
-    Returns the committed version.
-    """
-    from pyspark.sql import functions as F
-
-    if not key_cols:
-        raise ValueError("key_cols must be non-empty")
-    prop_key = f"merge.{table}.n_buckets"
-    pinned = cat.prop(prop_key)
-    if pinned is not None and int(pinned) != n_buckets:
-        raise ValueError(
-            f"{table} was merged with n_buckets={pinned}; bucket tags are "
-            f"only valid under that layout (got {n_buckets})"
-        )
-    bucket_of = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
-    dels = deletes.select(*key_cols).distinct().withColumn("__bucket", bucket_of)
-    touched = {
-        r["__bucket"] for r in dels.select("__bucket").distinct().collect()
-    }  # metadata-scale: at most n_buckets values
-    current = cat.entries(table, latest_only=True)
-    # untagged files (plain initial loads) may hold keys of any bucket
-    rewrite = [
-        e for e in current if e.get("bucket") is None or e["bucket"] in touched
-    ]
-    untouched = [e for e in current if e not in rewrite]
-    try:
-        if rewrite:
-            cur = spark.read.parquet(
-                *[str(cat.root / e["file"]) for e in rewrite]
-            )
-            kept = (
-                cur.join(F.broadcast(dels.drop("__bucket")), key_cols, "left_anti")
-                .withColumn("__bucket", bucket_of)
-                .persist()
-            )
-            out_buckets = sorted(
-                r["__bucket"] for r in kept.select("__bucket").distinct().collect()
-            )
-            try:
-                for b in out_buckets:
-                    part = kept.where(F.col("__bucket") == b).drop("__bucket")
-                    cat.stage_spark(table, part, bucket=b)
-            finally:
-                kept.unpersist()
-        cat.restage(table, untouched)
-    except Exception:
-        cat.abort()
-        raise
-    return cat.commit(props={prop_key: n_buckets, **(extra_props or {})})

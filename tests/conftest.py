@@ -18,7 +18,7 @@ TINY = dict(n_partitions=10, rows_per_partition=1000, hot_key_copies=50)
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="htm_streamer_spark_tests", cores=8, driver_memory="8g")
+    s = get_spark(app_name="htm_streamer_spark_tests")
     yield s
 
 

@@ -1,16 +1,12 @@
-"""Quantile binning: exact quartiles vs a pandas qcut-style oracle,
-approx-vs-exact agreement away from thresholds, bin population balance,
-and determinism."""
+"""Quantile binning: exact quartiles vs a pandas qcut-style oracle and
+bin population balance."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from htm_streamer_spark.operators.binning import (
-    quantile_bins_approx,
-    quantile_bins_exact,
-)
+from htm_streamer_spark.operators.binning import quantile_bins_exact
 
 
 @pytest.fixture(scope="module")
@@ -40,32 +36,3 @@ def test_exact_bins_balanced(spark, docs):
     counts = out.groupBy("lang", "bin").count().collect()
     for r in counts:
         assert r["count"] == pytest.approx(500, rel=0.02), r
-
-
-def test_approx_agrees_away_from_thresholds(spark, docs):
-    exact = {r.doc_id: r.bin for r in quantile_bins_exact(docs, "quality").collect()}
-    approx = {
-        r.doc_id: r.bin
-        for r in quantile_bins_approx(docs, "quality", rel_err=0.001).collect()
-    }
-    assert set(exact) == set(approx)
-    agree = sum(1 for k in exact if exact[k] == approx[k])
-    assert agree / len(exact) >= 0.98, agree / len(exact)
-    # disagreement is never more than one bin (only threshold-band rows)
-    assert all(abs(exact[k] - approx[k]) <= 1 for k in exact)
-
-
-def test_approx_single_agg_plan(spark, docs):
-    """The approx tier must not run one job per stratum: its plan is a
-    grouped sketch agg + broadcast join — assert one broadcast and no
-    more than the agg's own exchanges."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
-    out = quantile_bins_approx(docs, "quality")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert len(re.findall(r"^\(\d+\) BroadcastExchange\b", plan, re.M)) == 1

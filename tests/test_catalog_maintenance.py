@@ -1,11 +1,11 @@
 """Catalog maintenance: time-travel reads, small-file compaction, and
-snapshot expiry — and their interaction with the copy-on-write merge."""
+snapshot expiry."""
 
 from __future__ import annotations
 
 from pathlib import Path
 
-from htm_streamer_spark.sources.table_io import ManifestCatalog, merge_upsert
+from htm_streamer_spark.sources.table_io import ManifestCatalog
 
 SCHEMA = "k long, v string, updated_at long"
 
@@ -56,26 +56,24 @@ def test_compact_merges_small_files_and_keeps_history(spark, tmp_path):
 
 def test_compact_is_per_bucket(spark, tmp_path):
     cat = ManifestCatalog(tmp_path / "cat")
-    for _ in range(3):  # three merges -> several files per touched bucket
-        merge_upsert(
-            spark, cat, "t",
-            spark.createDataFrame([(k, "x", 1) for k in range(16)], SCHEMA),
-            ["k"], "updated_at", n_buckets=4,
-        )
+    # three bucket-tagged stages per bucket -> several files per bucket
+    for _ in range(3):
+        for b in range(4):
+            rows = [(k, "x", 1) for k in range(16) if k % 4 == b]
+            cat.stage_spark("t", spark.createDataFrame(rows, SCHEMA), bucket=b)
+    cat.commit()
+    assert len(cat.entries("t", latest_only=True)) > 4
     cat.compact(spark, "t")
     latest = cat.entries("t", latest_only=True)
     per_bucket = {}
     for e in latest:
         per_bucket.setdefault(e["bucket"], []).append(e)
+    assert sorted(per_bucket) == [0, 1, 2, 3]
     assert all(len(es) == 1 for es in per_bucket.values())
-    # merge still works against the compacted layout
-    merge_upsert(
-        spark, cat, "t",
-        spark.createDataFrame([(0, "y", 2)], SCHEMA),
-        ["k"], "updated_at", n_buckets=4,
-    )
-    got = {r.k: r.v for r in cat.read(spark, "t", latest_only=True).collect()}
-    assert got[0] == "y" and len(got) == 16
+    # each compacted file holds exactly its own bucket's rows
+    for b, (e,) in per_bucket.items():
+        ks = {r.k for r in spark.read.parquet(str(cat.root / e["file"])).collect()}
+        assert ks == {k for k in range(16) if k % 4 == b}
 
 
 def test_expire_reclaims_only_unreferenced(spark, tmp_path):

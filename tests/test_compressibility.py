@@ -9,12 +9,8 @@ import string
 import zlib
 
 import pytest
-from pyspark.sql import functions as F
 
-from htm_streamer_spark.operators.compressibility import (
-    compression_profile,
-    compression_stats,
-)
+from htm_streamer_spark.operators.compressibility import compression_stats
 
 
 def _ref_sizes(text: str, level: int = 6) -> tuple[int, int]:
@@ -75,25 +71,9 @@ def test_keep_cols_ride_through(spark, docs):
     assert pairs == truth
 
 
-def test_profile_pooled_and_bands(spark, docs):
-    prof = {r["source"]: r for r in compression_profile(docs, "source").collect()}
-    # pooled check for prose: mean of per-doc ratios, bands from per-doc cuts
-    per = [r for r in compression_stats(docs, keep_cols=("source",)).collect()
-           if r["source"] == "prose"]
-    assert prof["prose"]["n_docs"] == len(per)
-    mean_ref = sum(r["ratio"] for r in per) / len(per)
-    assert prof["prose"]["mean_ratio"] == pytest.approx(mean_ref, rel=1e-9)
-    assert prof["template"]["n_below"] == 1 and prof["noise"]["n_above"] == 1
-    # empty-text docs: counted, excluded from moments
-    assert prof["empty"]["n_docs"] == 2 and prof["empty"]["mean_ratio"] is None
-
-
 def test_empty_input(spark):
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert compression_stats(empty).count() == 0
-    assert compression_profile(
-        empty.withColumn("source", F.lit("s")), "source"
-    ).count() == 0
 
 
 def test_single_arrow_stage_plan(spark, docs):

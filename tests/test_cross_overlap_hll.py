@@ -1,15 +1,9 @@
-"""Cross-source winnowing-overlap matrix (operators/contamination.py)
-and mergeable HLL distinct sketches (operators/stats.py)."""
+"""Cross-source winnowing-overlap matrix (operators/contamination.py)."""
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from htm_streamer_spark.operators.contamination import cross_source_overlap
-from htm_streamer_spark.operators.stats import (
-    hll_merged_estimate,
-    hll_partition_sketches,
-)
 
 SHARED = (
     "the quick brown fox jumps over the lazy dog while the band plays "
@@ -63,35 +57,3 @@ class TestCrossSourceOverlap:
         out = cross_source_overlap(spark.createDataFrame(pdf)).toPandas()
         assert len(out) == 1
         assert out.iloc[0]["overlap"] == pytest.approx(1.0, abs=1e-6)
-
-
-class TestHllSketches:
-    def test_merged_equals_direct_and_bounds_exact(self, spark, tiny_dir):
-        df = spark.read.parquet(tiny_dir)
-        sk = hll_partition_sketches(df, "doc_id", "part_id", lg_config_k=12)
-        assert sk.count() == df.select("part_id").distinct().count()
-        merged = hll_merged_estimate(sk).collect()[0]
-        direct = df.agg(
-            F.hll_sketch_estimate(
-                F.hll_sketch_agg(F.col("doc_id"), F.lit(12))
-            ).alias("e")
-        ).collect()[0]["e"]
-        # union of per-partition sketches IS the whole-table sketch
-        assert merged["estimate"] == direct
-        exact = df.select("doc_id").distinct().count()
-        rsd = 1.04 / (2**12) ** 0.5
-        assert abs(merged["estimate"] - exact) <= 3 * rsd * exact
-
-    def test_incremental_union_extends(self, spark, tiny_dir):
-        # sketch halves separately, union at read time: same estimate
-        df = spark.read.parquet(tiny_dir)
-        lo = df.filter(F.col("part_id") < 5)
-        hi = df.filter(F.col("part_id") >= 5)
-        sk = hll_partition_sketches(lo, "doc_id").unionByName(
-            hll_partition_sketches(hi, "doc_id")
-        )
-        merged = hll_merged_estimate(sk).collect()[0]
-        whole = hll_merged_estimate(
-            hll_partition_sketches(df, "doc_id")
-        ).collect()[0]
-        assert merged["estimate"] == whole["estimate"]

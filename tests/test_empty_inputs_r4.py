@@ -71,18 +71,6 @@ def test_violation_certificate_empty(spark, empty_docs):
     assert out[0]["rate"] is None and out[0]["upper_bound"] is None
 
 
-def test_hll_sketches_empty(spark, empty_docs):
-    from htm_streamer_spark.operators.stats import (
-        hll_merged_estimate,
-        hll_partition_sketches,
-    )
-
-    sk = hll_partition_sketches(empty_docs, "doc_id", "source")
-    assert sk.count() == 0
-    merged = hll_merged_estimate(sk).collect()[0]
-    assert merged["n_parts"] == 0
-
-
 def test_winnow_empty_and_blank(spark):
     from htm_streamer_spark.operators.textstats import winnow_fingerprints
 

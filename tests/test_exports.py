@@ -1,5 +1,6 @@
 """Every name a subpackage lists in ``__all__`` must import from it, and
-every module of the package must be reached from a non-test entry point."""
+every function and class the package defines must be reached, by name,
+from a non-test entry point."""
 
 from __future__ import annotations
 
@@ -16,19 +17,28 @@ PKG = "htm_streamer_spark"
 ENTRY_GLOBS = [
     "__spark_entry__.py",
     f"{PKG}/cli.py",
-    "bench.py",
-    "bench_extra.py",
+    "bench*.py",
     "perfbench/*.py",
     "tools/*.py",
 ]
-# modules kept without a non-test importer, each for the reason given
+# test references and data generators: neither checked nor counted as
+# callers
+EXEMPT_DIRS = [ROOT / PKG / "fixtures"]
+# names kept without a non-test caller, each for the reason given; their
+# bodies count as reached, so helpers only they call need no entry here
 UNREACHED_ON_PURPOSE = {
-    f"{PKG}.sources.wap": "write-audit-publish, composed end to end by test_pipeline_e2e",
-    f"{PKG}.operators.observe": "zero-job run counters, to be attached to the flagship's token pass (ROADMAP D)",
-    f"{PKG}.fixtures.likelihood_oracle": "sequential reference the likelihood operators are tested against",
-    f"{PKG}.operators.schema_drift": "full landing-schema diff; to be wired beside validate_input_schema or deleted (ROADMAP C)",
-    f"{PKG}.sources.layout": "Hive partition-pruning writer and probe; to be wired into a sink or deleted (ROADMAP C)",
-    f"{PKG}.sources.zorder": "Z-order writer and footer-pruning probe; to be wired into a sink or deleted (ROADMAP C)",
+    "featurize": "native per-row features the fused flagship kernel is tested against",
+    "row_check_flags": "native row-check flags the fused flagship kernel is tested against",
+    "ntok_histogram": "native n_tok histogram the fused flagship kernel is tested against",
+    "token_bucket_expr": "native token-bucket expression the fused flagship kernel is tested against",
+    "anomaly_likelihood_exact": "sequential-parity reference the windowed likelihood operator is tested against",
+    "with_observed_metrics": "zero-job run counters, to be attached to the flagship's token pass (ROADMAP D)",
+    "MetricsRepository": "store for the engine's own run accounting (ROADMAP D)",
+    "read_records": "ingest reader, composed end to end by test_pipeline_e2e",
+    "streaming_dedup": "ingest dedup, composed end to end by test_pipeline_e2e",
+    "audit_spec": "write-audit-publish gate, composed end to end by test_pipeline_e2e",
+    "write_audit_publish": "write-audit-publish gate, composed end to end by test_pipeline_e2e",
+    "IcebergCatalog": "ManifestCatalog's binding to the paper's table format; needs the Iceberg runtime jar",
 }
 
 
@@ -40,50 +50,61 @@ def test_all_names_import(pkg):
     assert not missing, missing
 
 
-def _module_name(path: Path) -> str:
-    parts = list(path.relative_to(ROOT).with_suffix("").parts)
-    if parts[-1] == "__init__":
-        parts.pop()
-    return ".".join(parts)
+def _used_names(node: ast.AST) -> set[str]:
+    """Names ``node`` reads: bare names and attribute names. Imports are
+    not uses, so a package ``__init__`` re-export reaches nothing."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+    return out
 
 
-def _imports(path: Path, modules: dict[str, Path]) -> set[str]:
-    """Package modules ``path`` imports anywhere in its body (function-local
-    imports included), with every enclosing package ``__init__``."""
-    name = _module_name(path)
-    package = name if path.name == "__init__.py" else name.rpartition(".")[0]
-    targets = set()
-    for node in ast.walk(ast.parse(path.read_text())):
-        if isinstance(node, ast.Import):
-            targets.update(a.name for a in node.names)
-        elif isinstance(node, ast.ImportFrom):
-            mod = node.module or ""
-            if node.level:
-                base = package.rsplit(".", node.level - 1)[0]
-                mod = f"{base}.{mod}" if mod else base
-            targets.add(mod)
-            targets.update(f"{mod}.{a.name}" for a in node.names)
-    reached = set()
-    for t in targets:
-        parts = t.split(".")
-        for i in range(1, len(parts) + 1):
-            prefix = ".".join(parts[:i])
-            if prefix in modules:
-                reached.add(prefix)
-    return reached
+def _is_all(node: ast.stmt) -> bool:
+    return isinstance(node, ast.Assign) and any(
+        isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+    )
 
 
-def test_every_module_has_a_non_test_caller():
-    modules = {_module_name(p): p for p in (ROOT / PKG).rglob("*.py")}
-    entries = sorted(p for g in ENTRY_GLOBS for p in ROOT.glob(g))
-    seen = {_module_name(p) for p in entries}
-    todo = [m for p in entries for m in _imports(p, modules)]
+def _reached(roots: set[str], defs: dict[str, list[tuple[str, ast.AST]]]) -> set[str]:
+    seen: set[str] = set()
+    todo = list(roots)
     while todo:
-        mod = todo.pop()
-        if mod not in seen:
-            seen.add(mod)
-            todo.extend(_imports(modules[mod], modules))
-    unreached = sorted(set(modules) - seen - set(UNREACHED_ON_PURPOSE))
-    assert not unreached, f"modules no entry point reaches: {unreached}"
-    stale = sorted(set(UNREACHED_ON_PURPOSE) & seen)
-    assert not stale, f"allowlisted modules now reached: {stale}"
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for _, node in defs.get(name, []):
+            todo.extend(_used_names(node) - seen)
+    return seen
+
+
+def test_every_package_name_has_a_non_test_caller():
+    """Top-level functions and classes of the package, matched by name:
+    a name is reached when an entry point, a reached definition's body
+    or a module's import-time statements read it. Matching by name
+    rather than by resolved module errs towards reach: a dead
+    definition that shares its name with a live one goes unreported."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    roots: set[str] = set()
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        if any(d in path.parents for d in EXEMPT_DIRS):
+            continue
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                loc = f"{path.relative_to(ROOT)}:{node.lineno}"
+                defs.setdefault(node.name, []).append((loc, node))
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)) and not _is_all(node):
+                roots |= _used_names(node)
+    for g in ENTRY_GLOBS:
+        for path in ROOT.glob(g):
+            roots |= _used_names(ast.parse(path.read_text()))
+
+    reached = _reached(roots | set(UNREACHED_ON_PURPOSE), defs)
+    dead = sorted(f"{loc} {name}" for name in defs.keys() - reached for loc, _ in defs[name])
+    assert not dead, "definitions no entry point reaches:\n" + "\n".join(dead)
+    stale = sorted(set(UNREACHED_ON_PURPOSE) - defs.keys())
+    stale += sorted(set(UNREACHED_ON_PURPOSE) & _reached(roots, defs))
+    assert not stale, f"allowlisted names now missing or reached: {stale}"

@@ -13,13 +13,11 @@ from htm_streamer_spark.fixtures.likelihood_oracle import (
     anomaly_likelihood_series,
     erfc_as,
     filter_likelihoods,
-    moving_average,
 )
 from htm_streamer_spark.operators.likelihood import (
     anomaly_likelihood_exact,
     anomaly_likelihood_windowed,
     erfc_expr,
-    moving_average_col,
 )
 
 PARAMS = dict(
@@ -59,19 +57,6 @@ def test_erfc_expr_matches_numpy(spark):
         .to_numpy()
     )
     np.testing.assert_allclose(got, erfc_as(zs), rtol=0, atol=1e-12)
-
-
-def test_moving_average_matches_oracle(spark, series_sdf, series_pdf):
-    got = (
-        series_sdf.withColumn("ma", moving_average_col(F.col("score"), "series_id", "ts"))
-        .orderBy("series_id", "ts")
-        .select("series_id", "ma")
-        .toPandas()
-    )
-    for sid, grp in series_pdf.groupby("series_id"):
-        want = moving_average(grp.sort_values("ts")["score"].to_numpy())
-        have = got[got["series_id"] == sid]["ma"].to_numpy()
-        np.testing.assert_allclose(have, want, atol=1e-12)
 
 
 def test_exact_operator_matches_sequential_oracle(series_sdf, series_pdf):

@@ -1,19 +1,11 @@
-"""Sequence packing: contiguous-stream ids vs a pandas cumsum oracle,
-first-fit vs a reference python loop, invariants (no overflow except
-oversize singletons, reproducibility under repartitioning), and the
-efficiency summary."""
+"""Sequence packing: contiguous-stream ids vs a pandas cumsum oracle."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from htm_streamer_spark.operators.packing import (
-    pack_contiguous,
-    pack_first_fit,
-    packing_efficiency,
-)
+from htm_streamer_spark.operators.packing import pack_contiguous
 
 CAP = 100
 
@@ -38,61 +30,3 @@ def test_contiguous_matches_cumsum_oracle(spark, docs):
         d: (int(e // CAP), int(e)) for d, e in zip(pdf["doc_id"], excl)
     }
     assert got == want
-
-
-def test_first_fit_matches_reference_loop(spark, docs):
-    out = pack_first_fit(docs, CAP, n_shards=8).toPandas()
-    src = docs.toPandas()
-    # rebuild the expected packing per shard with a plain python loop
-    merged = out.merge(src, on="doc_id")
-    for shard, g in merged.groupby("shard"):
-        g = g.sort_values("doc_id")
-        bin_id, fill = 0, 0
-        first = True
-        for _, row in g.iterrows():
-            ln = int(row["n_tok"])
-            if not first and fill + ln > CAP:
-                bin_id += 1
-                fill = 0
-            first = False
-            fill += ln
-            assert (row["pack_id"], row["pack_fill"]) == (bin_id, fill), (
-                shard,
-                row["doc_id"],
-            )
-
-
-def test_first_fit_never_overflows_except_oversize(spark):
-    rows = [("a", 40), ("b", 70), ("c", 130), ("d", 90), ("e", 10)]
-    df = spark.createDataFrame(rows, "doc_id string, n_tok int")
-    packed = pack_first_fit(df, CAP, n_shards=1).toPandas()
-    fills = packed.groupby("pack_id")["pack_fill"].max()
-    src = dict(rows)
-    for pid, fill in fills.items():
-        members = packed[packed["pack_id"] == pid]["doc_id"]
-        if fill > CAP:
-            # only a doc longer than capacity may overflow, and it sits alone
-            assert len(members) == 1 and src[members.iloc[0]] > CAP
-    # every doc appears exactly once
-    assert sorted(packed["doc_id"]) == sorted(src)
-
-
-def test_packing_reproducible_under_repartition(spark, docs):
-    a = pack_first_fit(docs, CAP, n_shards=8).toPandas()
-    b = pack_first_fit(docs.repartition(13), CAP, n_shards=8).toPandas()
-    key = ["doc_id", "shard", "pack_id", "pack_fill"]
-    pd.testing.assert_frame_equal(
-        a.sort_values("doc_id").reset_index(drop=True)[key],
-        b.sort_values("doc_id").reset_index(drop=True)[key],
-    )
-
-
-def test_efficiency_summary(spark, docs):
-    packed = pack_first_fit(docs, CAP, n_shards=8)
-    row = packing_efficiency(packed, CAP).collect()[0]
-    total_tok = docs.agg(F.sum("n_tok")).collect()[0][0]
-    assert row.n_docs == 500
-    assert row.total_tokens == total_tok
-    assert 0.0 <= row.waste_frac < 0.5
-    # bins must at least cover total tokens at the given capacity
-    assert row.n_bins >= -(-total_tok // CAP)

@@ -13,7 +13,10 @@ repo-wide invariants that must hold for any query we ship:
   (java.util.regex attempts a match at every kept character; extract
   the allowed runs and join them instead, see dedup.keep_chars).
 
-explain-only: no job runs, so the whole 70+-query sweep is cheap.
+The rules read explained plans only, but the ``all_plans`` fixture
+first builds every query in ``queries()``, and building runs the
+builders' eager ``localCheckpoint`` / ``collect`` / ``count`` jobs: the
+sweep costs minutes of Spark work, whichever rules are selected.
 """
 
 from __future__ import annotations

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from htm_streamer_spark.config import EngineConfig
 from htm_streamer_spark.operators.invariants import featurize, row_violations
-from htm_streamer_spark.operators.referential import dim_sources_df, referential_violations
 from htm_streamer_spark.operators.stats import partition_stats
 from htm_streamer_spark.operators.uniqueness import duplicate_violations
 from htm_streamer_spark.plans.validation_plan import load_sequences, run_validation_batch
@@ -55,13 +54,6 @@ def test_stats_single_shuffle_partial_agg(seq, cfg):
     assert "partial_" in plan.lower() or "HashAggregate" in plan, plan
     # two HashAggregate levels (partial + final)
     assert plan.count("HashAggregate") >= 2, plan
-
-
-def test_referential_is_broadcast(spark, seq, cfg):
-    dim = dim_sources_df(spark, cfg)
-    plan = _plan(referential_violations(seq, dim))
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
 
 
 def test_duplicate_joinback_strategy_is_aqe_chosen(seq, cfg):

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from htm_streamer_spark.operators.profiling import (
     join_profile,
-    worst_segments,
+    worst_segments_mean,
 )
 
 
@@ -60,9 +60,7 @@ def test_worst_segments_finds_masked_segment(spark):
     rows = [("ok%d" % (i % 9), 0.0) for i in range(900)]
     rows += [("bad", 1.0) for _ in range(100)]
     df = _df(spark, rows, "seg string, flag double")
-    out = worst_segments(
-        df, "seg", F.round(F.avg("flag"), 6), "bad_rate", top_k=3
-    ).collect()
+    out = worst_segments_mean(df, "seg", F.col("flag"), "bad_rate", top_k=3).collect()
     assert out[0]["seg"] == "bad"
     assert out[0]["bad_rate"] == 1.0
     assert out[0]["global_bad_rate"] == 0.1
@@ -75,7 +73,7 @@ def test_worst_segments_finds_masked_segment(spark):
 def test_worst_segments_respects_top_k(spark):
     rows = [(f"s{i:02d}", float(i)) for i in range(30) for _ in range(2)]
     df = _df(spark, rows, "seg string, v double")
-    out = worst_segments(df, "seg", F.avg("v"), "m", top_k=5)
+    out = worst_segments_mean(df, "seg", F.col("v"), "m", top_k=5)
     assert out.count() == 5
 
 
@@ -85,35 +83,28 @@ def test_worst_segments_mean_matches_generic_single_scan(spark, tmp_path):
         str(tmp_path / "t")
     )
     df = spark.read.parquet(str(tmp_path / "t"))
-    generic = worst_segments(
-        df, "seg", F.round(F.avg("flag"), 6), "rate", top_k=7
-    ).collect()
-    from htm_streamer_spark.operators.profiling import worst_segments_mean
-
-    mean_df = worst_segments_mean(df, "seg", F.col("flag"), "rate", top_k=7)
-    assert sorted(map(tuple, mean_df.collect())) == sorted(
-        map(tuple, generic)
+    # generic reference: per-segment and global averages, two scans
+    glob = df.agg(F.round(F.avg("flag"), 6)).collect()[0][0]
+    per = df.groupBy("seg").agg(
+        F.round(F.avg("flag"), 6).alias("rate"), F.count(F.lit(1)).alias("n")
     )
-    # the specialization's point: ONE parquet scan of the fact table
-    # (the generic path needs two); the persisted per-segment frame
-    # shows up as InMemoryTableScan re-reads, not source scans.
-    # formatted explain dedups operator nodes (raw toString repeats
-    # the cached subtree at every reference)
+    want = sorted(
+        (r.seg, r.rate, glob, abs(r.rate - glob), r.n) for r in per.collect()
+    )
+    mean_df = worst_segments_mean(df, "seg", F.col("flag"), "rate", top_k=7)
+    assert sorted(map(tuple, mean_df.collect())) == want
+    # the specialization's point: ONE parquet scan of the fact table;
+    # the persisted per-segment frame shows up as InMemoryTableScan
+    # re-reads, not source scans. formatted explain dedups operator
+    # nodes (raw toString repeats the cached subtree at every reference)
     import io
     import re
     from contextlib import redirect_stdout
 
-    def n_scans(frame):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            frame.explain("formatted")
-        return len(re.findall(r"^\(\d+\) Scan parquet", buf.getvalue(), re.M))
-
-    assert n_scans(mean_df) <= 1
-    assert (
-        n_scans(worst_segments(df, "seg", F.round(F.avg("flag"), 6), "rate", 7))
-        == 2
-    )
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        mean_df.explain("formatted")
+    assert len(re.findall(r"^\(\d+\) Scan parquet", buf.getvalue(), re.M)) <= 1
 
 
 def test_time_gaps_finds_planted_holes(spark):

@@ -68,7 +68,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from htm_streamer_spark.session import get_spark
 
-    spark = get_spark(app_name="contract-check", cores=8, driver_memory="16g")
+    spark = get_spark(app_name="contract-check")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
